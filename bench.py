@@ -202,7 +202,6 @@ def _phase_crawl(master_cores: str) -> None:
         salt_buckets=max(int(master_cores), 8),
         use_bloom=True, bloom_bits=1 << 22, bloom_buckets=16,
         fetch_join="bucketed",
-        pages_partitions=None,
         # payload_projection (the JVM-side ld+json pre-projection) is
         # deliberately NOT enabled: measured 16.0k vs 19.1k steady
         # urls/s at local[8] on this microVM — the guard scans cost

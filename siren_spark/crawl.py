@@ -6,8 +6,8 @@ structured so each round materializes exactly two heavy jobs:
 1. **annotate**: ONE plan over the frontier computes every scheduling
    decision as columns — robots verdict (vectorized matcher), in-frontier
    dedup rank (window over url_canon), seen-set probe (broadcast Bloom +
-   exact-confirm join on the maybe-seen sliver only), and the salted
-   two-phase per-host politeness top-k — and writes the annotated
+   exact-confirm join on the maybe-seen sliver only), and the per-host
+   politeness top-k (operators/politeness.py) — and writes the annotated
    frontier with a ``status`` column
    (blocked | deduped | scheduled | deferred). Counters and the next
    round's inputs all derive from this parquet; nothing is recomputed.
@@ -47,10 +47,11 @@ from pyspark.sql import functions as F
 
 from siren_spark.functions.udfs import canonicalize_udf, domain_udf, extract_pages
 from siren_spark.operators.checkpoint import CheckpointStore
+from siren_spark.operators.politeness import politeness_flag
 from siren_spark.operators.robots import RobotsMatcher
 from siren_spark.operators.seen import (
     BloomFilter, build_bloom, build_bloom_partials, merge_blooms,
-    or_reduce_bitmaps,
+    or_reduce_bitmaps, probe_bloom_broadcast, probe_bloom_bucketed,
 )
 
 import pandas as pd
@@ -70,6 +71,9 @@ HEADLINE_DEDUP_SOURCES = ("ht",)
 @dataclass
 class CrawlConfig:
     budget_per_host: int = 50          # reference max_concurrency, config.toml:10
+    # politeness salt (operators/politeness.py): per-task ranking work
+    # is bounded per (domain, salt); salt_buckets * budget_per_host above
+    # THRESHOLD_KEYS_MAX (2^22) selects the distributed range-rank tier
     salt_buckets: int = 16
     max_rounds: int = 30
     use_bloom: bool = True
@@ -93,34 +97,11 @@ class CrawlConfig:
     # compact the seen-set sources once more than this many tables back
     # it (keeps every round's seen read at O(1) inputs, not O(rounds))
     seen_compact_every: int = 8
-    # pipeline consecutive rounds: round N+1's annotate depends only on
-    # round N's STAGED tables (extracted links + annotated frontier) and
-    # the Bloom state — not on the results/counters/frontier writes — so
-    # it runs concurrently with them in the derived-writes window,
-    # taking the ~flat annotate latency off the round critical path at
-    # every cluster size. Works in bucketed-bloom mode too (the 10^10
-    # configuration): the round's bitmap table is STAGED from the pool
-    # right after annotate (it depends only on the staged annotated
-    # frontier + last round's committed bitmaps), the prestaged
-    # next-round annotate reads that staged-but-uncommitted path, and
-    # the commit simply references it. Safe under kills: pre-staged
-    # next-round tables are uncommitted, and resume rebuilds them from
-    # the same deterministic committed inputs.
-    pipeline_rounds: bool = True
     # debug-mode invariant checks (task-side assert_true columns, a
     # python-UDF cost — never enable in a measured run): currently
     # verifies domain == registrable_domain(url_canon) on every frontier
     # row, the invariant the fused (domain, __salt) dup window relies on
     debug_invariants: bool = False
-    # exact-confirm strategy for maybe-seen (Bloom-positive) rows:
-    # 'broadcast' inverts the join — the maybe-sliver keys broadcast
-    # INTO the seen scan (left-semi) and only the tiny hit-set comes
-    # back, so the O(crawl-history) seen table streams out of parquet
-    # with no shuffle and the frontier never splits; 'join' keeps the
-    # definite/candidate split with a sort-merge confirm (the
-    # arbitrarily-large-frontier path); 'auto' broadcasts while the
-    # frontier row estimate stays under broadcast_fetch_max
-    seen_confirm: str = "auto"
     # enrich results with a detected-language column (trigram-profile
     # classifier, functions/langid.py) — the production-shaped LLM-data
     # path; off by default to keep the reference result schema exact
@@ -142,9 +123,11 @@ class CrawlConfig:
     window_start: datetime | None = None
     window_end: datetime | None = None
     keywords: list[str] = dc_field(default_factory=list)
-    pages_partitions: int | None = None  # repartition pages on url_canon
     # broadcast the scheduled side of the fetch join below this row count
-    # (above it: co-partitioned SMJ, the 10^10-scale path)
+    # (above it: SMJ, the 10^10-scale path); the maybe-seen confirm
+    # keys on the same bound — under it the Bloom-positive sliver
+    # broadcasts INTO the seen scan, above it the frontier splits into
+    # definite-new and candidate rows with a sort-merge confirm
     broadcast_fetch_max: int = 2_000_000
     # fetch-join strategy: 'auto' broadcasts the scheduled side under
     # broadcast_fetch_max and falls back to SMJ above it; 'broadcast'
@@ -155,23 +138,6 @@ class CrawlConfig:
     # — no per-round broadcast build, no corpus exchange, no corpus
     # sort (plan pinned by tests/test_fetch_bucketed.py)
     fetch_join: str = "auto"
-    # politeness phase-2 strategy cutover, keyed on the free driver-side
-    # frontier-size estimate (an upper bound on any hot sliver): at or
-    # under this, rank survivors with one per-domain window (a single
-    # task sorts the sliver — sub-second at this size, no extra
-    # caches); above it, compute the same exact rank distributively
-    # (range-partition + per-partition offsets, all lazy) so no single
-    # task ever sorts a hot domain's full sliver (the Amdahl term
-    # measured at 0.39 efficiency on the binding-budget spot pair)
-    politeness_rank_local_max: int = 1 << 16
-    # politeness phase-2 middle tier: when salt_buckets * budget keys
-    # fit one task comfortably (the realistic-budget regime — the
-    # reference runs budget=50), each hot domain's exact B-th order key
-    # is computed with two bounded key-only aggregates and broadcast
-    # back; full-width rows never shuffle and nothing persists or
-    # samples. Above this, the range-partition exact rank takes over
-    # (no single task ever holds a domain's full key set).
-    politeness_threshold_keys_max: int = 1 << 22
     # JVM-side payload pre-projection (SQL expression over `html`,
     # evaluated inside the scan pipeline BEFORE the Arrow crossing): when
     # it yields a non-empty string, that string replaces the page payload
@@ -197,7 +163,7 @@ FRONTIER_COLS = ["url", "url_canon", "domain", "priority", "depth", "via",
                  "meta"]
 
 
-def prepare_pages(pages: DataFrame, cfg: CrawlConfig) -> DataFrame:
+def prepare_pages(pages: DataFrame) -> DataFrame:
     """Attach the canonical join key to the pages store — lazily.
 
     Deliberately NO repartition and NO cache: with the broadcast fetch
@@ -206,9 +172,10 @@ def prepare_pages(pages: DataFrame, cfg: CrawlConfig) -> DataFrame:
     column-pruned to url+html). Shuffling or caching the html column
     would move the whole corpus through memory/disk before any work
     happens — at 100 TB that is the difference between a scan and a
-    catastrophe. ``pages_partitions`` exists for the SMJ fallback path,
-    where a real deployment bucket-writes the table once at ingest
-    (bucket(N, url_canon)) instead of repartitioning per crawl.
+    catastrophe. A deployment that needs a co-partitioned join
+    bucket-writes the table once at ingest (bucket(N, url_canon):
+    BucketedParquetPageStore with fetch_join='bucketed') instead of
+    repartitioning per crawl.
     """
     if "url_canon" in pages.columns:
         # canonical key precomputed at ingest (the production shape): the
@@ -222,8 +189,6 @@ def prepare_pages(pages: DataFrame, cfg: CrawlConfig) -> DataFrame:
             F.col("url").alias("page_url"),
             "html",
         )
-    if cfg.pages_partitions:
-        p = p.repartition(cfg.pages_partitions, "url_canon")
     return p
 
 
@@ -257,10 +222,15 @@ def _annotate_round(
     """One plan: robots -> dedup -> seen -> politeness, as a status column.
 
     ``frontier_rows`` is the driver's (free, observation-derived)
-    estimate of this round's frontier size, used only to pick the
-    seen-confirm join strategy under ``cfg.seen_confirm='auto'``."""
-    spark = frontier.sparkSession
+    estimate of this round's frontier size: it picks the seen-confirm
+    join and the politeness tier."""
     df = frontier
+
+    def _cache(d: DataFrame) -> DataFrame:
+        d = d.persist()
+        if cache_registry is not None:
+            cache_registry.append(d)
+        return d
 
     if cfg.debug_invariants:
         # the fused dup window below partitions by (domain, __salt) and
@@ -315,7 +285,6 @@ def _annotate_round(
     if bucketed:
         # each task cogroups with exactly its bucket's bitmap — no
         # executor ever holds the full filter
-        from siren_spark.operators.seen import probe_bloom_bucketed
         df = probe_bloom_bucketed(
             df, bloom_bitmaps, "url_canon",
             bits_per_bucket=cfg.bloom_bits, buckets=cfg.bloom_buckets)
@@ -327,21 +296,8 @@ def _annotate_round(
     # phase 1 to re-exchange the whole frontier — the exact shuffle the
     # fusion exists to remove. Probing first keeps the WindowExec as
     # the cached plan's tail, whose partitioning the cache reports.
-    if (seen_exact is not None and cfg.use_bloom and not bucketed
-            and bloom is not None):
-        bcb = spark.sparkContext.broadcast(bloom)
-
-        @F.pandas_udf("boolean")
-        def maybe_udf(h1: pd.Series, h2: pd.Series) -> pd.Series:
-            import numpy as np
-            f = bcb.value
-            return pd.Series(f.might_contain_np(
-                h1.to_numpy(dtype="int64"), h2.to_numpy(dtype="int64")))
-
-        from siren_spark.operators.seen import _SEED2
-        df = df.withColumn("__maybe", maybe_udf(
-            F.xxhash64(F.col("url_canon")),
-            F.xxhash64(F.col("url_canon"), F.lit(_SEED2))))
+    if bloom_bcast:
+        df = probe_bloom_broadcast(df, bloom, "url_canon")
 
     # --- in-frontier dedup, FUSED into the politeness partition family:
     # domain and __salt are both functions of url_canon, so a url_canon
@@ -370,15 +326,9 @@ def _annotate_round(
         # df is consumed multiple times below (confirm sliver + eligible
         # count + final status): persist the small flag-annotated frame
         # so the upstream (gate UDF + window + probe) runs once
-        df = df.persist()
-        if cache_registry is not None:
-            cache_registry.append(df)
-        bcast_confirm = (
-            cfg.seen_confirm == "broadcast"
-            or (cfg.seen_confirm == "auto"
-                and frontier_rows is not None
-                and frontier_rows <= cfg.broadcast_fetch_max))
-        if bcast_confirm:
+        df = _cache(df)
+        if frontier_rows is not None \
+                and frontier_rows <= cfg.broadcast_fetch_max:
             # INVERTED confirm: broadcast the maybe-sliver keys into the
             # seen scan (left-semi) and the tiny hit-set back onto the
             # frontier. The (big, O(crawl-history)) seen table streams
@@ -416,201 +366,28 @@ def _annotate_round(
                 .withColumn("__seen",
                             F.coalesce(F.col("__hit"), F.lit(False)))
                 .drop("__hit"))
-            df = (definite.drop("__maybe")
-                  .unionByName(candidates.drop("__maybe")))
-            df = df.persist()
-            if cache_registry is not None:
-                cache_registry.append(df)
+            df = _cache(definite.drop("__maybe")
+                        .unionByName(candidates.drop("__maybe")))
     elif plain_seen_join:
         seen_keys = seen_exact.select("url_canon").withColumn(
             "__hit", F.lit(True))
-        df = (df.join(seen_keys, "url_canon", "left")
-              .withColumn("__seen", F.coalesce(F.col("__hit"), F.lit(False)))
-              .drop("__hit"))
-        df = df.persist()
-        if cache_registry is not None:
-            cache_registry.append(df)
+        df = _cache(df.join(seen_keys, "url_canon", "left")
+                    .withColumn("__seen",
+                                F.coalesce(F.col("__hit"), F.lit(False)))
+                    .drop("__hit"))
     else:
-        df = df.withColumn("__seen", F.lit(False))
-        df = df.persist()
-        if cache_registry is not None:
-            cache_registry.append(df)
+        df = _cache(df.withColumn("__seen", F.lit(False)))
 
     df = df.withColumn(
         "__eligible",
         F.col("__allowed") & F.col("__first") & ~F.col("__seen"),
     )
 
-    # --- politeness: exact per-host top-budget ------------------------
-    # Three physical strategies compute the same scheduled set — defined
-    # by the strict per-domain total order (priority desc, url_canon
-    # asc; url_canon is unique among eligible rows after the dup window)
-    # — cut over on free driver-side bounds, never a driver action (a
-    # driver action here would serialize the prestaged annotate into
-    # multiple synchronized jobs — measured: the eager variant held the
-    # binding-budget commit window at 2->8 efficiency 0.48 — where the
-    # whole path must stay lazy so the politeness rank fuses into the
-    # staged-annotate write job).
-    out_cols = [*FRONTIER_COLS, "__allowed", "__first", "__seen", "__sched"]
-    if frontier_rows is not None and frontier_rows <= cfg.budget_per_host:
-        # whole-frontier fast path: the frontier row count (exact — it
-        # is last round's observed links+deferred) cannot exceed the
-        # budget, so no domain can either: every eligible row is
-        # provably scheduled and the count/join/window machinery would
-        # compute a constant — skip it all (throughput-mode rounds and
-        # the long tail of small rounds hit this)
-        df = df.withColumn("__sched", F.col("__eligible")).select(*out_cols)
-        return _annotate_finish(df)
-    if cfg.salt_buckets * cfg.budget_per_host \
-            <= cfg.politeness_threshold_keys_max:
-        # realistic budgets (the reference operates at budget=50,
-        # config.toml:10): a scheduled row is exactly one whose ORDER
-        # KEY is at or under its domain's B-th best eligible key, so
-        # compute only that per-domain threshold — one two-level
-        # JVM-side aggregate over (priority, url_canon) KEYS alone —
-        # keep it for the (few, on a web frontier) domains whose
-        # eligible count exceeds the budget, broadcast the
-        # one-row-per-hot-domain result back, and filter. Full-width
-        # rows never shuffle, nothing persists, no stage samples
-        # (repartitionByRange's range-sampling job was a flat
-        # ~per-round term the binding-budget 2->8 spot paid at both
-        # core levels), and there is no cold/hot split-union — the
-        # cached frontier streams through ONE branch with a broadcast
-        # left join (under-budget domains simply have no threshold
-        # row). Per-(domain, salt) top-B truncation before the merge
-        # is lossless — a key cut in its bucket has >= B better keys
-        # in that bucket alone — and bounds the per-domain merge task
-        # to salt_buckets * B keys (<= politeness_threshold_keys_max
-        # by this cutover; the truncating agg task itself holds one
-        # bucket's eligible keys, the same bound the phase-1 window
-        # sort holds in the other tiers). When a domain is over
-        # budget its merged array holds >= B keys (each bucket
-        # contributes min(bucket_n, B), so the truncated sum is
-        # >= min(n, B)), hence its threshold is never null.
-        b = cfg.budget_per_host
-        key = F.struct((-F.col("priority")).alias("np"),
-                       F.col("url_canon").alias("uc"))
-        thr = (df.filter(F.col("__eligible"))
-               .select("domain", "__salt", key.alias("__k"))
-               .groupBy("domain", "__salt")
-               .agg(F.slice(F.array_sort(F.collect_list("__k")),
-                            1, b).alias("__ks"),
-                    F.count(F.lit(1)).alias("__bn"))
-               .groupBy("domain")
-               .agg(F.try_element_at(
-                        F.array_sort(F.flatten(F.collect_list("__ks"))),
-                        F.lit(b)).alias("__thr"),
-                    F.sum("__bn").alias("__n"))
-               .filter(F.col("__n") > b)
-               .select("domain", "__thr"))
-        df = (df.join(F.broadcast(thr), "domain", "left")
-              .withColumn(
-                  "__sched",
-                  F.col("__eligible")
-                  & (F.col("__thr").isNull()     # domain under budget
-                     | (key <= F.col("__thr"))))
-              .select(*out_cols))
-        return _annotate_finish(df)
-
-    # window tiers: only domains whose eligible count exceeds the
-    # budget need ranking at all — for an under-budget domain every
-    # eligible row is provably scheduled (phase-1 rank <= per-bucket
-    # eligible count <= budget, and phase 2 ranks all survivors within
-    # the budget), so those rows bypass both windows. The over-budget
-    # set is found with one map-side-combined count and broadcast back;
-    # on a web frontier hot hosts are few, so phase 2's full-domain
-    # sort — previously a whole-frontier exchange — moves only the hot
-    # sliver. Phase 1 bounds any hot domain's phase-2 input to
-    # salt_buckets*budget rows, so one hot host (30%+ of a web
-    # frontier) cannot funnel through one task.
-    hot = (df.filter(F.col("__eligible"))
-           .groupBy("domain").agg(F.count(F.lit(1)).alias("__n"))
-           .filter(F.col("__n") > cfg.budget_per_host)
-           .select("domain").withColumn("__hot", F.lit(True)))
-    df = df.join(F.broadcast(hot), "domain", "left")
-
-    cold = df.filter(F.col("__hot").isNull()).withColumn(
-        "__sched", F.col("__eligible"))
-    hotr = df.filter(F.col("__hot").isNotNull())
-    order = [F.desc("__eligible"), F.desc("priority"),
-             F.asc("url_canon")]
-    w1 = Window.partitionBy("domain", "__salt").orderBy(*order)
-    hotr = (hotr.withColumn("__rn1", F.row_number().over(w1))
-            .withColumn(
-                "__surv",
-                F.col("__eligible")
-                & (F.col("__rn1") <= cfg.budget_per_host)))
-    if (frontier_rows or 0) <= cfg.politeness_rank_local_max:
-        # small frontier: one per-domain window — a single task sorts
-        # at most the (pre-bounded) sliver
-        w2 = Window.partitionBy("domain").orderBy(
-            F.desc("__surv"), F.desc("priority"), F.asc("url_canon"))
-        hotr = (hotr.withColumn("__rn2", F.row_number().over(w2))
-                .withColumn(
-                    "__sched",
-                    F.col("__surv")
-                    & (F.col("__rn2") <= cfg.budget_per_host)))
-        df = cold.select(*out_cols).unionByName(
-            hotr.select(*out_cols))
-        return _annotate_finish(df)
-    # huge budgets: a plain Window.partitionBy("domain") would
-    # funnel every survivor of a hot domain through ONE task —
-    # measured as the term that capped the binding-budget 2->8 spot
-    # at 0.39 (one core sorts while the rest idle). Compute the
-    # EXACT rank distributively instead, fully lazily:
-    # range-partition the survivors on the total order
-    # (domain, priority desc, url_canon — strict: url_canon is
-    # unique among eligible rows after the dup window), sort within
-    # partitions, then global rank = rows of the same domain in
-    # earlier partitions + the row's offset inside its domain's
-    # contiguous block (monotonically_increasing_id minus the
-    # block's min — exact because partitions are sorted). The
-    # cross-partition offsets come from a per-(partition, domain)
-    # count aggregate — O(partitions x hot domains) rows — ranked
-    # by a window over that TINY frame and broadcast back: no
-    # driver action anywhere, every stage parallel.
-    # hotr is cached because the survivor and cut branches both
-    # read it — uncached, each recomputes the window with its own
-    # sliver exchange. monotonically_increasing_id is deterministic
-    # here (fixed partition count, total-order sort), so the two
-    # reads of surv — the offsets aggregate and the join left side
-    # — agree even if a cached partition is recomputed.
-    hotr = hotr.persist()
-    if cache_registry is not None:
-        cache_registry.append(hotr)
-    surv = hotr.filter(F.col("__surv"))
-    rest = hotr.filter(~F.col("__surv")).withColumn(
-        "__sched", F.lit(False))
-    p_n = spark.sparkContext.defaultParallelism * 2
-    ord2 = [F.asc("domain"), F.desc("priority"), F.asc("url_canon")]
-    surv = (surv.repartitionByRange(p_n, *ord2)
-            .sortWithinPartitions(*ord2)
-            .withColumn("__pid", F.spark_partition_id())
-            .withColumn("__mid", F.monotonically_increasing_id())
-            .persist())
-    if cache_registry is not None:
-        cache_registry.append(surv)
-    w_off = (Window.partitionBy("domain").orderBy("__pid")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    off_df = (surv.groupBy("__pid", "domain")
-              .agg(F.count(F.lit(1)).alias("__c"),
-                   F.min("__mid").alias("__m0"))
-              .withColumn("__off", F.coalesce(
-                  F.sum("__c").over(w_off), F.lit(0)))
-              .select("__pid", "domain", "__off", "__m0"))
-    surv = (surv.join(F.broadcast(off_df), ["__pid", "domain"])
-            .withColumn("__rank", F.col("__off")
-                        + (F.col("__mid") - F.col("__m0")) + F.lit(1))
-            .withColumn("__sched",
-                        F.col("__rank") <= cfg.budget_per_host))
-    df = (cold.select(*out_cols)
-          .unionByName(surv.select(*out_cols))
-          .unionByName(rest.select(*out_cols)))
-
-    return _annotate_finish(df)
-
-
-def _annotate_finish(df: DataFrame) -> DataFrame:
+    # --- politeness: exact per-host top-budget (operators/politeness.py)
+    df = politeness_flag(df, budget_per_host=cfg.budget_per_host,
+                         salt_buckets=cfg.salt_buckets,
+                         frontier_rows=frontier_rows,
+                         cache_registry=cache_registry)
     status = (
         F.when(~F.col("__allowed"), F.lit("blocked"))
         .when(~F.col("__first") | F.col("__seen"), F.lit("deduped"))
@@ -878,7 +655,7 @@ def run_crawl(
     fail_after_round: int | None = None,  # test hook: simulate a kill
 ) -> CrawlResult:
     store = CheckpointStore(checkpoint_dir)
-    pages_p = prepare_pages(pages, cfg)
+    pages_p = prepare_pages(pages)
 
     matcher = None
     robots_df = None
@@ -1016,7 +793,7 @@ def run_crawl(
             # ---- job 1: annotate + commit scheduling decisions -------------
             if pending is not None and pending["gen"] == gen:
                 # staged concurrently with the previous round's derived
-                # writes (pipeline_rounds) — already durable in the gen dir
+                # writes (round pipelining) — already durable in the gen dir
                 ann_path, n_by_status = pending["path"], pending["counts"]
                 pending = None
             else:
@@ -1035,7 +812,7 @@ def run_crawl(
             # partials OR-merged into last round's committed bitmaps): it
             # lands in this round's uncommitted gen dir, the commit below
             # references it, and the prestaged next-round annotate reads it
-            # pre-commit — which is what lets pipeline_rounds stay effective
+            # pre-commit — which is what keeps round pipelining effective
             # in the 10^10-scale configuration.
             bloom_fut = None
             bloom_tbl_fut = None
@@ -1080,9 +857,6 @@ def run_crawl(
                 fetched = pages_p.join(F.broadcast(fetch_side), "url_canon",
                                        "inner")
             else:
-                if cfg.pages_partitions:
-                    fetch_side = fetch_side.repartition(cfg.pages_partitions,
-                                                        "url_canon")
                 fetched = fetch_side.join(pages_p, "url_canon", "inner")
             fetch_in = fetched.select("url", "html", "meta")
             if cfg.payload_projection:
@@ -1224,13 +998,17 @@ def run_crawl(
                             _hl_seen_df(spark, hl_sources_next))
 
                     hl_fut = pool.submit(_stage_hl_compact)
-            # skip the prestage when this round's observations already prove
-            # the next frontier empty (links + deferred == 0): the loop is
-            # about to terminate, and the annotate would only stage a table
-            # no round consumes — wasted cluster time, plus an uncommitted
-            # gen dir the run would leave behind
-            if cfg.pipeline_rounds and gen + 1 < cfg.max_rounds \
-                    and (frontier_rows or 0) > 0:
+            # round pipelining: round N+1's annotate depends only on round
+            # N's STAGED tables and the Bloom state, not on the derived
+            # writes, so it runs concurrently with them — taking the ~flat
+            # annotate latency off the round critical path. Safe under
+            # kills: the prestaged tables are uncommitted, and resume
+            # rebuilds them from the same deterministic committed inputs.
+            # Skipped when this round's observations already prove the
+            # next frontier empty (links + deferred == 0): the annotate
+            # would only stage a table no round consumes, plus an
+            # uncommitted gen dir the run would leave behind
+            if gen + 1 < cfg.max_rounds and (frontier_rows or 0) > 0:
                 next_fut = pool.submit(_prestage_next)
             staged_paths = {name: f.result() for name, f in futs.items()}
             _log(f"gen {gen}   write frontier|results|counters "

@@ -14,6 +14,11 @@ Mirrors the reference CLI/TOML config surface (__main__.py:23-88,
 config.toml:1-16): keywords, date window, politeness budget
 (= max_concurrency), plus the Spark-native knobs (bloom size, salt
 buckets, max rounds). No driver-side per-row Python anywhere.
+
+Politeness ranks keys per (domain, salt) bucket; with the default 64
+salt buckets, ``--budget`` above 65536 (64 x budget > 2^22 keys)
+switches to the distributed range-rank tier, whose per-task memory stays
+bounded at any budget.
 """
 
 from __future__ import annotations

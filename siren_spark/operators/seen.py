@@ -218,6 +218,25 @@ def probe_bloom_bucketed(
     return probed.drop("__h1", "__h2", "__bucket")
 
 
+def probe_bloom_broadcast(
+    df: DataFrame,
+    bloom: BloomFilter,
+    key: str = "url_canon",
+) -> DataFrame:
+    """Broadcast Bloom probe: adds boolean ``__maybe`` (False = key
+    definitely not in the filter). The whole filter broadcasts once and
+    each batch is one vectorized bit test over JVM-computed hashes."""
+    bc = df.sparkSession.sparkContext.broadcast(bloom)
+
+    @F.pandas_udf("boolean")
+    def maybe_udf(h1: pd.Series, h2: pd.Series) -> pd.Series:
+        return pd.Series(bc.value.might_contain_np(
+            h1.to_numpy(dtype=np.int64), h2.to_numpy(dtype=np.int64)))
+
+    return df.withColumn("__maybe", maybe_udf(
+        F.xxhash64(F.col(key)), F.xxhash64(F.col(key), F.lit(_SEED2))))
+
+
 def build_bloom(
     df: DataFrame,
     col: str,
@@ -264,23 +283,13 @@ def filter_unseen(
 
     bf = build_bloom(seen, key, bits_per_bucket=bits_per_bucket,
                      num_hashes=num_hashes, buckets=buckets)
-    spark = frontier.sparkSession
-    bc = spark.sparkContext.broadcast(bf)
-
-    @F.pandas_udf("boolean")
-    def maybe_seen(h1: pd.Series, h2: pd.Series) -> pd.Series:
-        f = bc.value
-        return pd.Series(f.might_contain_np(
-            h1.to_numpy(dtype=np.int64), h2.to_numpy(dtype=np.int64)))
-
-    hashed = _hash_cols(frontier, key).withColumn(
-        "__maybe", maybe_seen(F.col("__h1"), F.col("__h2"))
-    )
-    definite_new = hashed.filter(~F.col("__maybe")).drop("__h1", "__h2", "__maybe")
-    candidates = hashed.filter(F.col("__maybe")).drop("__h1", "__h2", "__maybe")
+    probed = probe_bloom_broadcast(frontier, bf, key)
+    definite_new = probed.filter(~F.col("__maybe")).drop("__maybe")
+    candidates = probed.filter(F.col("__maybe")).drop("__maybe")
     confirmed_new = candidates.join(seen.select(key), key, "left_anti")
     return definite_new.unionByName(confirmed_new)
 
 
 __all__ = ["BloomFilter", "build_bloom", "build_bloom_partials",
-           "or_reduce_bitmaps", "probe_bloom_bucketed", "filter_unseen"]
+           "or_reduce_bitmaps", "probe_bloom_broadcast", "probe_bloom_bucketed",
+           "filter_unseen"]

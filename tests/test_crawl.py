@@ -467,7 +467,7 @@ def test_bucketed_pipeline_resume_equals_uninterrupted(
         budget_per_host=BUDGET, window_start=WINDOW_START,
         window_end=WINDOW_END, keywords=SPEC.keywords,
         use_bloom=True, bloom_bits=1 << 16, bloom_buckets=4, salt_buckets=4,
-        bloom_probe="bucketed", pipeline_rounds=True,
+        bloom_probe="bucketed",
     )
     ckpt = str(tmp_path / "ckbp")
     with pytest.raises(RuntimeError, match="simulated kill"):
@@ -531,64 +531,108 @@ def test_debug_invariants_catch_domain_corruption(spark, site, engine,
         _annotate_round(bad, cfg=cfg, bloom=None, seen_exact=None).count()
 
 
-def test_politeness_rank_strategies_equivalent(spark):
-    """The three phase-2 rank strategies — small-sliver per-domain
-    window, key-threshold broadcast (realistic budgets), and the
-    at-scale distributed exact rank — must produce identical per-URL
-    statuses on a skewed frontier (one domain far over budget, several
-    at the margin, cold tail). The cutover is a physical choice only;
-    the scheduled set is defined by the same strict total order
-    (domain, priority desc, url_canon)."""
-    from pyspark.sql import functions as F
-
-    from siren_spark.crawl import CrawlConfig, _annotate_round
+def test_politeness_rank_strategies_equivalent(spark, monkeypatch):
+    """The two ranking tiers of the politeness operator — key-threshold
+    broadcast (realistic budgets) and the at-scale distributed exact
+    rank — must flag identical rows on a skewed frontier (one domain far
+    over budget, several at the margin, cold tail, ineligible rows that
+    must neither be scheduled nor consume budget). The cutover is a
+    physical choice only; the scheduled set is defined by the same
+    strict total order (domain, priority desc, url_canon)."""
+    from siren_spark.operators import politeness
 
     rows = []
     # hot domain: 400 urls with colliding priorities (rank ties broken
     # by url_canon alone)
     for i in range(400):
-        u = f"https://hot.example/a/{i:04d}"
-        rows.append((u, u, "hot.example", float(i % 7), 0, None, {}))
+        rows.append((f"https://hot.example/a/{i:04d}", "hot.example",
+                     float(i % 7), True))
+    # ineligible hot rows that would otherwise win every slot
+    for i in range(20):
+        rows.append((f"https://hot.example/b/{i:04d}", "hot.example",
+                     99.0, False))
     # marginal domains: just over budget
     for d in range(5):
         for i in range(30):
-            u = f"https://m{d}.example/p/{i:03d}"
-            rows.append((u, u, f"m{d}.example", 1.0, 0, None, {}))
+            rows.append((f"https://m{d}.example/p/{i:03d}", f"m{d}.example",
+                         1.0, True))
     # cold tail
     for i in range(50):
-        u = f"https://c{i}.example/only"
-        rows.append((u, u, f"c{i}.example", 1.0, 0, None, {}))
-    fr = spark.createDataFrame(
-        rows, "url string, url_canon string, domain string, "
-              "priority double, depth int, via string, "
-              "meta map<string,string>")
+        rows.append((f"https://c{i}.example/only", f"c{i}.example", 1.0,
+                     True))
+    fr = (spark.createDataFrame(
+        rows, "url_canon string, domain string, priority double, "
+              "__eligible boolean")
+          .withColumn("__salt", F.pmod(F.xxhash64("url_canon"), F.lit(16))))
 
-    def statuses(local_max, keys_max=1 << 22):
+    def flags(keys_max):
+        monkeypatch.setattr(politeness, "THRESHOLD_KEYS_MAX", keys_max)
         caches: list = []
-        cfg = CrawlConfig(budget_per_host=25, use_bloom=False,
-                          politeness_rank_local_max=local_max,
-                          politeness_threshold_keys_max=keys_max)
-        ann = _annotate_round(fr, cfg=cfg, bloom=None, seen_exact=None,
-                              cache_registry=caches,
-                              frontier_rows=len(rows))
+        out = politeness.politeness_flag(
+            fr, budget_per_host=25, salt_buckets=16,
+            frontier_rows=len(rows), cache_registry=caches)
         try:
-            return {(r.url_canon, r.status) for r in ann.collect()}
+            return {(r.url_canon, r["__sched"]) for r in out.collect()}
         finally:
             for c in caches:
                 c.unpersist()
 
-    threshold = statuses(0)            # default keys_max -> threshold tier
-    windowed = statuses(1 << 30, keys_max=0)      # force per-domain window
-    distributed = statuses(0, keys_max=0)     # force range-partition rank
-    assert windowed == threshold
-    assert windowed == distributed
-    sched = {u for u, s in windowed if s == "scheduled"}
+    threshold = flags(1 << 22)     # 16 * 25 keys fit: threshold tier
+    distributed = flags(0)         # force the range-partition rank
+    assert threshold == distributed
+    assert len(threshold) == len(rows)
+    sched = {u for u, s in threshold if s}
     assert sum(u.startswith("https://hot.") for u in sched) == 25
     # within the hot domain the kept set is the exact top-25 of the
-    # total order: priority desc, then url_canon asc
+    # total order over eligible rows: priority desc, then url_canon asc
     want = sorted((f"https://hot.example/a/{i:04d}" for i in range(400)),
                   key=lambda u: (-(int(u[-4:]) % 7), u))[:25]
     assert {u for u in sched if u.startswith("https://hot.")} == set(want)
+    # marginal domains keep their first 25 urls, the cold tail all
+    for d in range(5):
+        assert {u for u in sched if u.startswith(f"https://m{d}.")} == {
+            f"https://m{d}.example/p/{i:03d}" for i in range(25)}
+    assert sum(u.startswith("https://c") for u in sched) == 50
+
+
+def test_seen_split_confirm_equals_broadcast_confirm(spark):
+    """Above broadcast_fetch_max the maybe-seen confirm splits the
+    frontier into definite-new and candidate rows and sort-merge-joins
+    the candidates against the seen set; under it the candidate keys
+    broadcast into the seen scan. Both must give every URL the same
+    status."""
+    from siren_spark.crawl import _annotate_round, _seeds_to_frontier
+    from siren_spark.operators.seen import build_bloom
+
+    seeds = spark.createDataFrame(
+        [(f"https://d{i % 7}.example/p/{i}",) for i in range(500)],
+        "url string")
+    fr = _seeds_to_frontier(seeds)
+    seen = (spark.createDataFrame(
+        [(f"https://d{i % 7}.example/p/{i}",) for i in range(0, 500, 3)],
+        "url string").select(F.col("url").alias("url_canon")))
+    bloom = build_bloom(seen, "url_canon",
+                        bits_per_bucket=1 << 14, buckets=4)
+
+    def statuses(cfg):
+        caches: list = []
+        ann = _annotate_round(fr, cfg=cfg, bloom=bloom, seen_exact=seen,
+                              cache_registry=caches, frontier_rows=500)
+        try:
+            return {(r.url_canon, r.status) for r in ann.collect()}, caches
+        finally:
+            for c in caches:
+                c.unpersist()
+
+    split, split_caches = statuses(
+        CrawlConfig(budget_per_host=20, broadcast_fetch_max=0))
+    bcast, bcast_caches = statuses(CrawlConfig(budget_per_host=20))
+    assert split == bcast
+    # the split path really ran: it caches the re-unioned frame too
+    assert len(split_caches) == len(bcast_caches) + 1
+    by = {s: sum(1 for _, x in split if x == s)
+          for s in ("deduped", "scheduled", "deferred")}
+    assert by == {"deduped": 167, "scheduled": 140, "deferred": 193}
 
 
 def test_frontier_reconstruction_and_legacy_preference(spark, tmp_path):

@@ -65,7 +65,7 @@ def test_bucketed_fetch_join_moves_only_scheduled_side(
     exchange — the scheduled side hashing into the table's buckets.
     The pages scan reports its bucketing and reaches the join with no
     Exchange and no Sort (an SMJ would re-sort the corpus per round)."""
-    pages_p = prepare_pages(bucketed_pages, _cfg(fetch_join="bucketed"))
+    pages_p = prepare_pages(bucketed_pages)
     sched = spark.createDataFrame(
         [(p["url"], p["url"], None) for p in site.pages[:5]],
         "url string, url_canon string, meta map<string,string>")
@@ -117,7 +117,7 @@ def test_bucketed_store_reattaches_across_sessions(
         spark.sql("DROP TABLE pages_bucketed_reatt")
         df = store.read(spark)
         assert df.count() == n
-        pages_p = prepare_pages(df, _cfg(fetch_join="bucketed"))
+        pages_p = prepare_pages(df)
         sched = spark.createDataFrame(
             [(p["url"], p["url"], None) for p in site.pages[:5]],
             "url string, url_canon string, meta map<string,string>")

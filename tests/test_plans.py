@@ -43,11 +43,11 @@ def test_small_dim_join_broadcasts(spark):
 
 def test_crawl_fetch_join_broadcasts_and_pages_never_shuffle(spark):
     from pyspark.sql import functions as F
-    from siren_spark.crawl import CrawlConfig, prepare_pages
+    from siren_spark.crawl import prepare_pages
     from siren_spark.testing.sitegen import SiteSpec, build_site
     from tests.conftest import pages_df
     site = build_site(SiteSpec(mirror_seed_range=(10, 12)))
-    pages_p = prepare_pages(pages_df(spark, site.pages), CrawlConfig())
+    pages_p = prepare_pages(pages_df(spark, site.pages))
     sched = spark.createDataFrame(
         [(p["url"], p["url"], None) for p in site.pages[:5]],
         "url string, url_canon string, meta map<string,string>")
@@ -121,7 +121,7 @@ def test_bucketed_bloom_or_reduce_shuffles_bitmaps_not_urls(spark):
     assert "url_canon" not in tail, p
 
 
-def test_annotate_single_full_frontier_exchange(spark):
+def test_annotate_single_full_frontier_exchange(spark, monkeypatch):
     """The round-4 annotate restructure (fused dup window + inverted
     broadcast seen-confirm + politeness split-union) must keep exactly
     ONE full-frontier shuffle in the executed plan:
@@ -150,6 +150,7 @@ def test_annotate_single_full_frontier_exchange(spark):
     from siren_spark.crawl import (
         CrawlConfig, _annotate_round, _seeds_to_frontier,
     )
+    from siren_spark.operators import politeness
     from siren_spark.operators.seen import build_bloom
 
     seeds = spark.createDataFrame(
@@ -164,13 +165,11 @@ def test_annotate_single_full_frontier_exchange(spark):
     # budget 20 < ~47 post-seen eligible rows per domain, so every
     # domain is hot and the sliver path (w1 + distributed rank) really
     # executes — at budget 50 AQE proves the sliver empty and the pin
-    # would not cover it; rank_local_max=0 skips the small-sliver
-    # window and threshold_keys_max=0 skips the key-threshold tier
+    # would not cover it; a zero key cap skips the key-threshold tier
     # (pinned by test_annotate_threshold_tier_plan), forcing the
     # at-scale range-partition rank
-    cfg = CrawlConfig(budget_per_host=20, use_bloom=True,
-                      politeness_rank_local_max=0,
-                      politeness_threshold_keys_max=0)
+    monkeypatch.setattr(politeness, "THRESHOLD_KEYS_MAX", 0)
+    cfg = CrawlConfig(budget_per_host=20, use_bloom=True)
     caches: list = []
     ann = _annotate_round(fr, cfg=cfg, bloom=bloom, seen_exact=seen,
                           cache_registry=caches, frontier_rows=500)
@@ -227,8 +226,7 @@ def test_annotate_threshold_tier_plan(spark):
         "url string").select(F.col("url").alias("url_canon")))
     bloom = build_bloom(seen, "url_canon",
                         bits_per_bucket=1 << 14, buckets=4)
-    cfg = CrawlConfig(budget_per_host=20, use_bloom=True,
-                      politeness_rank_local_max=0)   # default keys_max
+    cfg = CrawlConfig(budget_per_host=20, use_bloom=True)
     caches: list = []
     ann = _annotate_round(fr, cfg=cfg, bloom=bloom, seen_exact=seen,
                           cache_registry=caches, frontier_rows=500)
@@ -305,3 +303,12 @@ def test_round5_ops_plan_shape(spark):
     assert "BroadcastNestedLoopJoin" not in p, p
     # the Levenshtein math stays in whole-stage codegen (no Python)
     assert "levenshtein" in p and "PythonUDF" not in p, p
+
+
+def test_gate_views_reregister_after_drop(spark):
+    """The temp-view memo must not outlive the views it vouches for: a
+    gate query re-registers a view dropped since the last call."""
+    q = entrymod.queries()["politeness_topk_per_host"]
+    n = q(spark, SF).count()
+    spark.catalog.dropTempView("customer")
+    assert q(spark, SF).count() == n

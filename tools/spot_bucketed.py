@@ -1,16 +1,15 @@
-"""Measured bucketed-bloom round time, pipelined vs serial.
+"""Measured bucketed-bloom round time against the broadcast bloom.
 
 bloom_probe='bucketed' is the 10^10-URL configuration (the seen filter
 lives as a distributed (bucket, bitmap) checkpoint table — no driver or
-single-executor copy). Until round 5 it auto-disabled round pipelining,
-paying the full annotate latency on every round's critical path; the
-bitmap staging now runs in the fetch+extract overlap window and the
-prestaged next-round annotate reads the staged (pre-commit) table.
+single-executor copy). Its bitmap staging runs in the fetch+extract
+overlap window and the prestaged next-round annotate reads the staged
+(pre-commit) table, so rounds pipeline as in broadcast mode.
 
 This tool records the round-time evidence on the real bench web at one
-core level: the same crawl with bloom_probe='bucketed' run twice —
-pipeline_rounds=True vs False — printing per-round wall times and
-steady throughput for both, plus the broadcast-bloom reference.
+core level: the same crawl with bloom_probe='bucketed' and with the
+broadcast-bloom reference, printing per-round wall times and steady
+throughput for both.
 
 Usage: python tools/spot_bucketed.py [cores]      # default 8
        (assumes the bench web: python bench.py --phase gen)
@@ -52,8 +51,6 @@ def _phase(master_cores: str, mode: str) -> None:
         salt_buckets=max(int(master_cores), 8),
         use_bloom=True, bloom_bits=1 << 22, bloom_buckets=16,
         bloom_probe=("broadcast" if mode == "broadcast" else "bucketed"),
-        pipeline_rounds=(mode != "bucketed_serial"),
-        pages_partitions=None,
     )
     ckpt = tempfile.mkdtemp(prefix="siren_spotb_ckpt_")
     try:
@@ -89,7 +86,7 @@ def main() -> None:
         return
     cores = sys.argv[1] if len(sys.argv) > 1 else "8"
     out = {}
-    for mode in ("bucketed_pipelined", "bucketed_serial", "broadcast"):
+    for mode in ("bucketed", "broadcast"):
         proc = subprocess.run(
             [sys.executable, os.path.abspath(__file__), "--phase", cores,
              mode],

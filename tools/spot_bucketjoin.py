@@ -9,8 +9,9 @@ Three strategies over the same bench web at one core level:
   bucket(N, url_canon) ingest shape), fetch join planned as a
   shuffled-hash join — only the scheduled side shuffles, no broadcast
   build, no corpus exchange/sort;
-- plain SMJ reference (pages_partitions): both sides shuffle — the
-  anti-pattern the bucketed store exists to avoid.
+- plain SMJ reference (broadcast_fetch_max=0 over the unbucketed
+  store): the corpus shuffles every round — the anti-pattern the
+  bucketed store exists to avoid.
 
 Usage: python tools/spot_bucketjoin.py [cores] [strategies...]
        (default: 8 broadcast bucketed; assumes the bench web —
@@ -94,8 +95,7 @@ def _phase_crawl(master_cores: str, strategy: str) -> None:
         cfg_kw = {"fetch_join": "bucketed"}
     elif strategy == "smj":
         pages = spark.read.parquet(f"{BENCH_DATA}/pages")
-        cfg_kw = {"fetch_join": "auto", "broadcast_fetch_max": 0,
-                  "pages_partitions": int(master_cores) * 2}
+        cfg_kw = {"fetch_join": "auto", "broadcast_fetch_max": 0}
     else:
         pages = spark.read.parquet(f"{BENCH_DATA}/pages")
         cfg_kw = {"fetch_join": "broadcast"}

@@ -83,7 +83,6 @@ def _phase_crawl(master_cores: str) -> None:
         budget_per_host=BUDGET,
         salt_buckets=max(int(master_cores), 8),
         use_bloom=True, bloom_bits=1 << 22, bloom_buckets=16,
-        pages_partitions=None,
         max_rounds=40,     # deferral drain tail needs headroom
     )
     ckpt = tempfile.mkdtemp(prefix="siren_spot_ckpt_")

@@ -89,7 +89,7 @@ def _phase_crawl(cores: str, mode: str) -> None:
         budget_per_host=budget,
         salt_buckets=max(int(cores), 8),
         use_bloom=True, bloom_bits=1 << 22, bloom_buckets=16,
-        fetch_join="bucketed", pages_partitions=None,
+        fetch_join="bucketed",
         max_rounds=40,
     )
     ckpt = tempfile.mkdtemp(prefix="siren_vol_ckpt_")
