@@ -45,7 +45,9 @@ from datetime import datetime
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from siren_spark.functions.udfs import canonicalize_udf, domain_udf, extract_pages
+from siren_spark.functions.udfs import (
+    canonicalize_udf, coalesce_to_cores, domain_udf, extract_pages,
+)
 from siren_spark.operators.checkpoint import CheckpointStore
 from siren_spark.operators.politeness import politeness_flag
 from siren_spark.operators.robots import RobotsMatcher
@@ -142,12 +144,14 @@ class CrawlConfig:
     # evaluated inside the scan pipeline BEFORE the Arrow crossing): when
     # it yields a non-empty string, that string replaces the page payload
     # handed to the extraction kernels; empty/NULL keeps the full html.
-    # The JVM->Python Arrow shuttle is the dominant per-byte cost of the
-    # fetch+extract stage once kernels are fast, so projecting a 20 KB
-    # page down to the <200-byte fragment a kernel actually reads cuts
-    # the crossing ~100x. CORRECTNESS PRECONDITION (caller-owned, like
-    # any pushdown hint): the expression must be payload-preserving for
-    # the kernels that will see it — i.e. parse_page(url, proj(html))
+    # Projecting a 20 KB page down to the <200-byte fragment a kernel
+    # actually reads cuts the crossing's bytes ~100x — but the bytes are
+    # a small share of the stage: measured on a 4-vCPU host, 262 MB of
+    # html through the Arrow crossing costs <= 0.3 s of worker CPU, while
+    # every Python task costs ~0.2 s of set-up (functions/udfs.py).
+    # CORRECTNESS PRECONDITION (caller-owned, like any pushdown hint):
+    # the expression must be payload-preserving for the kernels that
+    # will see it — i.e. parse_page(url, proj(html))
     # == parse_page(url, html) for every page it rewrites. Kernels
     # export vetted projections (kernels/sites.py
     # MIRROR_LDJSON_PROJECTION); equivalence is pinned by
@@ -224,7 +228,10 @@ def _annotate_round(
     ``frontier_rows`` is the driver's (free, observation-derived)
     estimate of this round's frontier size: it picks the seen-confirm
     join and the politeness tier."""
-    df = frontier
+    # one task per core for the Python stage below (robots gate UDF,
+    # broadcast Bloom probe): a coalesce, so no exchange is added and
+    # the dup window's exchange stays the only full-frontier shuffle
+    df = coalesce_to_cores(frontier)
 
     def _cache(d: DataFrame) -> DataFrame:
         d = d.persist()

@@ -131,6 +131,11 @@ def _ntile_distributed(df: DataFrame, buckets: int,
     otherwise        ->  tile = r + ceil((rank - r*(q+1)) / q)
     with q = N div n, r = N mod n. Every stage is parallel: no
     no-partition window, no collect, no sampling pass.
+
+    Rows whose leading value is NULL form their own value-bucket (NULL
+    ``__vb``), which the ascending offset window sorts first — ntile's
+    ascending NULLS FIRST — and which joins its offset null-safely (an
+    equi-join on ``__vb`` would drop those rows).
     """
     lead = order_cols[0]
     b = df.withColumn("__vb", F.floor(F.col(lead)).cast("long"))
@@ -142,7 +147,7 @@ def _ntile_distributed(df: DataFrame, buckets: int,
              .rowsBetween(Window.unboundedPreceding, -1))
     offsets = per_bucket.withColumn(
         "__off", F.coalesce(F.sum("__c").over(w_off), F.lit(0))).select(
-        "__vb", "__off")
+        F.col("__vb").alias("__ovb"), "__off")
     total = per_bucket.agg(F.sum("__c").alias("__N"))
     w_local = Window.partitionBy("__vb").orderBy(
         *[F.asc(c) for c in order_cols])
@@ -153,7 +158,9 @@ def _ntile_distributed(df: DataFrame, buckets: int,
         f"CASE WHEN __rank <= (__q + 1) * __r"
         f" THEN (__rank + __q) DIV (__q + 1)"
         f" ELSE __r + (__rank - (__q + 1) * __r + __q - 1) DIV __q END")
-    return (b.join(F.broadcast(offsets), "__vb")
+    return (b.join(F.broadcast(offsets),
+                   F.col("__vb").eqNullSafe(F.col("__ovb")))
+            .drop("__ovb")
             .crossJoin(F.broadcast(total))
             .withColumn("__rank",
                         F.col("__off") + F.row_number().over(w_local))

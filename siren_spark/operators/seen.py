@@ -105,9 +105,12 @@ def build_bloom_partials(
 ) -> DataFrame:
     """Distributed Bloom build: (bucket, bitmap) rows, one per bucket.
 
-    Rows shuffle to their bucket first so each task emits exactly one
-    partial bitmap: total volume = B * m/8 bytes, independent of input
-    partitioning (without this, partials = partitions x buckets bitmaps).
+    Rows shuffle to their bucket first so each bucket's partial bitmap
+    is emitted by exactly one task: total volume = B * m/8 bytes,
+    independent of input partitioning (without this, partials =
+    partitions x buckets bitmaps). The shuffle targets
+    min(B, defaultParallelism) partitions — one Python task per core at
+    most, each building the bitmaps of the buckets it holds.
     The result is a DataFrame — callers either ``collect()`` it into a
     driver-side :class:`BloomFilter` (small filters, broadcast probe) or
     keep it distributed and OR-merge with :func:`or_reduce_bitmaps`
@@ -117,7 +120,8 @@ def build_bloom_partials(
     m = bits_per_bucket
     k = num_hashes
     B = buckets
-    hashed = hashed.repartition(B, F.pmod(F.col("__h1"), F.lit(B)))
+    tasks = min(B, df.sparkSession.sparkContext.defaultParallelism)
+    hashed = hashed.repartition(tasks, F.pmod(F.col("__h1"), F.lit(B)))
 
     def build(batches):
         local: dict[int, np.ndarray] = {}

@@ -151,3 +151,77 @@ def test_bucketed_store_one_file_per_bucket(spark, site, tmp_path_factory):
         assert len(files) == 4, sorted(os.path.basename(f) for f in files)
     finally:
         spark.sql("DROP TABLE IF EXISTS pages_bucketed_files")
+
+
+# One crawl round in its own local[2] session (the shared test session
+# runs local[4], and a SparkContext's core count is fixed at start).
+_TASK_SHAPE_JOB = r"""
+import glob, json, os, sys
+from pyspark.sql import functions as F
+from siren_spark.crawl import CrawlConfig, run_crawl
+from siren_spark.operators.checkpoint import CheckpointStore
+from siren_spark.operators.seen import build_bloom_partials
+from siren_spark.session import get_spark
+from siren_spark.sources.pages import BucketedParquetPageStore
+from siren_spark.testing.frames import pages_df, seeds_df
+from siren_spark.testing.sitegen import (
+    WINDOW_END, WINDOW_START, SiteSpec, build_site)
+
+out = sys.argv[1]
+spark = get_spark("local[2]", shuffle_partitions=4, extra_conf={
+    "spark.sql.warehouse.dir": os.path.join(out, "warehouse")})
+spec = SiteSpec(mirror_seed_range=(10, 14))
+site = build_site(spec)
+store = BucketedParquetPageStore("pages_b16", buckets=16,
+                                 path=os.path.join(out, "pages"))
+store.write(pages_df(spark, site.pages))
+cfg = CrawlConfig(budget_per_host=10, max_rounds=1,
+                  window_start=WINDOW_START, window_end=WINDOW_END,
+                  keywords=spec.keywords, fetch_join="bucketed")
+ck = os.path.join(out, "ck")
+run_crawl(spark, store.read(spark), seeds_df(spark, site.seeds), cfg, ck)
+tables = CheckpointStore(ck).manifest(0)["tables"]
+sched = (spark.read.parquet(tables["frontier_ann"])
+         .filter(F.col("status") == "scheduled").select("url_canon"))
+partials = build_bloom_partials(sched, "url_canon",
+                                bits_per_bucket=1 << 12, buckets=16)
+print(json.dumps({
+    "cores": spark.sparkContext.defaultParallelism,
+    "scheduled": sched.count(),
+    "extracted_files": len(glob.glob(
+        os.path.join(tables["extracted"], "part-*.parquet"))),
+    "bloom_partitions": partials.rdd.getNumPartitions(),
+    "bloom_buckets": sorted(r.bucket for r in partials.collect()),
+}))
+spark.stop()
+"""
+
+
+def test_python_stages_run_one_task_per_core(tmp_path):
+    """Every Python task pays a fixed worker set-up, so a crawl round's
+    Python stages run as at most one task per core even when the
+    16-bucket pages store offers 16 partitions: the staged extraction
+    (one file per extract task) has <= defaultParallelism part files,
+    and the Bloom build runs min(buckets, defaultParallelism) tasks
+    that still emit exactly one partial per bucket."""
+    import json
+    import os
+    import subprocess
+    import sys
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_DRIVER_MEM="2g",
+               PYTHONPATH=os.pathsep.join(
+                   [root] + [p for p in os.environ.get(
+                       "PYTHONPATH", "").split(os.pathsep) if p]))
+    proc = subprocess.run(
+        [sys.executable, "-c", _TASK_SHAPE_JOB, str(tmp_path)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert got["cores"] == 2, got
+    assert got["scheduled"] > 0, got
+    assert 1 <= got["extracted_files"] <= got["cores"], got
+    assert got["bloom_partitions"] == min(16, got["cores"]), got
+    # one partial per bucket the scheduled keys hash into, never two
+    buckets = got["bloom_buckets"]
+    assert buckets and len(buckets) == len(set(buckets)), got

@@ -671,6 +671,31 @@ def test_lm_distributed_ntile_matches_window_ntile(spark):
         assert got == want, n
 
 
+def test_lm_distributed_ntile_keeps_null_leads(spark):
+    """Rows whose leading order value is NULL are kept and tiled like
+    the window ``ntile`` tiles them: ascending order puts NULLs first,
+    so they fill the first tiles (ordered among themselves by the next
+    order column). An inner equi-join on floor(lead) would drop them."""
+    import random
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+    from siren_spark.functions.lm import _ntile_distributed
+    rng = random.Random(11)
+    rows = [(i, None if i % 5 == 0 else round(rng.uniform(-2.0, 4.0), 1))
+            for i in range(61)]
+    df = spark.createDataFrame(rows, "doc_id long, nll_per_gram double")
+    for n in (1, 3, 7, 12, 61, 80):
+        want = {r.doc_id: r.b for r in df.withColumn(
+            "b", F.ntile(n).over(
+                Window.orderBy(F.asc("nll_per_gram"),
+                               F.asc("doc_id")))).collect()}
+        got = {r.doc_id: r.bucket for r in _ntile_distributed(
+            df.repartition(5), n,
+            order_cols=["nll_per_gram", "doc_id"]).collect()}
+        assert len(got) == len(rows), n
+        assert got == want, n
+
+
 def test_lm_bucket_plan_has_no_bulk_global_window(spark, docs):
     """The scored (per-doc) rows must never pass through a
     no-partition Window: the only partition-less window allowed is the
