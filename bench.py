@@ -202,12 +202,10 @@ def _phase_crawl(master_cores: str) -> None:
         salt_buckets=max(int(master_cores), 8),
         use_bloom=True, bloom_bits=1 << 22, bloom_buckets=16,
         fetch_join="bucketed",
-        # payload_projection (the JVM-side ld+json pre-projection) is
-        # deliberately NOT enabled: measured 16.0k vs 19.1k steady
-        # urls/s at local[8] on this microVM — the guard scans cost
-        # more than the Arrow bytes they save when CPU is plentiful.
-        # The feature targets bandwidth-constrained clusters; its
-        # correctness is pinned by test_payload_projection_equivalence.
+        # the html crosses into the extract kernels whole: a JVM-side
+        # ld+json pre-projection measured slower (16.0k vs 19.1k steady
+        # urls/s at local[8]; its guard scans cost more than the Arrow
+        # bytes they saved) and was removed
     )
     ckpt = tempfile.mkdtemp(prefix="siren_bench_ckpt_")
     try:

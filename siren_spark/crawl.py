@@ -50,13 +50,12 @@ from siren_spark.functions.udfs import (
 )
 from siren_spark.operators.checkpoint import CheckpointStore
 from siren_spark.operators.politeness import politeness_flag
-from siren_spark.operators.robots import RobotsMatcher
+from siren_spark.operators.robots import RobotsGate
 from siren_spark.operators.seen import (
-    BloomFilter, build_bloom, build_bloom_partials, merge_blooms,
-    or_reduce_bitmaps, probe_bloom_broadcast, probe_bloom_bucketed,
+    BloomFilter, bloom_bucketed, build_bloom, build_bloom_partials,
+    merge_blooms, or_reduce_bitmaps, probe_bloom_broadcast,
+    probe_bloom_bucketed,
 )
-
-import pandas as pd
 
 # Client-side strict date-window filter applies only where the reference
 # applies it (P1): mirror.py:61, online/telegraph.py:48, newsminute.py:81-83.
@@ -70,6 +69,16 @@ KEYWORD_FILTERED_SOURCES = ("tg_epaper",)
 HEADLINE_DEDUP_SOURCES = ("ht",)
 
 
+# scheduled rows up to which the fetch join broadcasts the scheduled
+# side (fetch_join='auto'; SMJ above it). The maybe-seen confirm keys on
+# the same bound over the frontier: under it the Bloom-positive sliver
+# broadcasts INTO the seen scan, above it the frontier splits into
+# definite-new and candidate rows with a sort-merge confirm
+BROADCAST_FETCH_MAX = 2_000_000
+
+FETCH_JOINS = ("auto", "bucketed")
+
+
 @dataclass
 class CrawlConfig:
     budget_per_host: int = 50          # reference max_concurrency, config.toml:10
@@ -79,23 +88,12 @@ class CrawlConfig:
     salt_buckets: int = 16
     max_rounds: int = 30
     use_bloom: bool = True
+    # Bloom filter shape; a total bitmap over
+    # operators.seen.BLOOM_BROADCAST_MAX_BYTES (64 MiB) lives as a
+    # (bucket, bitmap) checkpoint table probed by cogroup, so no single
+    # machine holds it (the 10^10-URL path); smaller filters broadcast
     bloom_bits: int = 1 << 20
     bloom_buckets: int = 16
-    # robots gate delivery: 'broadcast' collects the rules table to the
-    # driver and broadcasts a compiled matcher (fine for ~10^3 domains);
-    # 'cogroup' ships each task exactly its domains' rule rows — the
-    # million-domain path, no driver copy (operators/robots.py); 'auto'
-    # (default, mirroring bloom_probe) broadcasts small tables and
-    # switches to cogroup above robots_broadcast_max rows, so a user who
-    # never reads this flag cannot hit a driver OOM at scale.
-    robots_probe: str = "auto"
-    # 'broadcast': driver-held filter broadcast whole (fast while total
-    #   bitmap is tens of MB); 'bucketed': filter lives as a (bucket,
-    #   bitmap) checkpoint table, probe cogroups frontier with bitmaps so
-    #   each task holds ONE bucket's bytes — the 10^10-URL path, where
-    #   the full filter (~12.5 GB) can live on no single machine;
-    # 'auto': bucketed once total bitmap bytes exceed 64 MB.
-    bloom_probe: str = "auto"
     # compact the seen-set sources once more than this many tables back
     # it (keeps every round's seen read at O(1) inputs, not O(rounds))
     seen_compact_every: int = 8
@@ -108,56 +106,24 @@ class CrawlConfig:
     # classifier, functions/langid.py) — the production-shaped LLM-data
     # path; off by default to keep the reference result schema exact
     lang_detect: bool = False
-    # headline-dedup (A3) scope: 'run' carries a (source, title) done-set
-    # across rounds — the reference semantic, where the done-set spans the
-    # whole scrape() (ht.py:261-268); 'round' dedups within a round only.
-    headline_dedup_scope: str = "run"
-    # robots rules delivery threshold for robots_probe='auto': collect+
-    # broadcast up to this many rule rows, cogroup above it (a
-    # million-domain rules table must never be collected to the driver)
-    robots_broadcast_max: int = 100_000
-
-    def bloom_bucketed(self) -> bool:
-        if self.bloom_probe == "bucketed":
-            return True
-        return (self.bloom_probe == "auto"
-                and (self.bloom_bits // 8) * self.bloom_buckets > (64 << 20))
     window_start: datetime | None = None
     window_end: datetime | None = None
     keywords: list[str] = dc_field(default_factory=list)
-    # broadcast the scheduled side of the fetch join below this row count
-    # (above it: SMJ, the 10^10-scale path); the maybe-seen confirm
-    # keys on the same bound — under it the Bloom-positive sliver
-    # broadcasts INTO the seen scan, above it the frontier splits into
-    # definite-new and candidate rows with a sort-merge confirm
-    broadcast_fetch_max: int = 2_000_000
-    # fetch-join strategy: 'auto' broadcasts the scheduled side under
-    # broadcast_fetch_max and falls back to SMJ above it; 'broadcast'
-    # forces the broadcast; 'bucketed' assumes the pages frame reads a
-    # table bucketed on url_canon (sources/pages.py
-    # BucketedParquetPageStore, or Iceberg's bucket(N, url_canon)) and
-    # plans a shuffled-hash join where ONLY the scheduled side shuffles
-    # — no per-round broadcast build, no corpus exchange, no corpus
-    # sort (plan pinned by tests/test_fetch_bucketed.py)
+    # fetch-join strategy: 'auto' broadcasts the scheduled side up to
+    # BROADCAST_FETCH_MAX rows and falls back to SMJ above it; 'bucketed'
+    # assumes the pages frame reads a table bucketed on url_canon
+    # (sources/pages.py BucketedParquetPageStore, or Iceberg's
+    # bucket(N, url_canon)) and plans a shuffled-hash join where ONLY
+    # the scheduled side shuffles — no per-round broadcast build, no
+    # corpus exchange, no corpus sort (plan pinned by
+    # tests/test_fetch_bucketed.py)
     fetch_join: str = "auto"
-    # JVM-side payload pre-projection (SQL expression over `html`,
-    # evaluated inside the scan pipeline BEFORE the Arrow crossing): when
-    # it yields a non-empty string, that string replaces the page payload
-    # handed to the extraction kernels; empty/NULL keeps the full html.
-    # Projecting a 20 KB page down to the <200-byte fragment a kernel
-    # actually reads cuts the crossing's bytes ~100x — but the bytes are
-    # a small share of the stage: measured on a 4-vCPU host, 262 MB of
-    # html through the Arrow crossing costs <= 0.3 s of worker CPU, while
-    # every Python task costs ~0.2 s of set-up (functions/udfs.py).
-    # CORRECTNESS PRECONDITION (caller-owned, like any pushdown hint):
-    # the expression must be payload-preserving for the kernels that
-    # will see it — i.e. parse_page(url, proj(html))
-    # == parse_page(url, html) for every page it rewrites. Kernels
-    # export vetted projections (kernels/sites.py
-    # MIRROR_LDJSON_PROJECTION); equivalence is pinned by
-    # tests/test_crawl.py::test_payload_projection_equivalence.
-    payload_projection: str | None = None
     verbose: bool = False
+
+    def __post_init__(self) -> None:
+        if self.fetch_join not in FETCH_JOINS:
+            raise ValueError(f"fetch_join must be one of {FETCH_JOINS}, "
+                             f"got {self.fetch_join!r}")
 
 
 RESULT_COLS = ["source", "url", "title", "author", "location", "published",
@@ -215,8 +181,7 @@ def _annotate_round(
     frontier: DataFrame,
     *,
     cfg: CrawlConfig,
-    matcher_bc=None,
-    robots_df: DataFrame | None = None,
+    robots: RobotsGate | None = None,
     bloom: BloomFilter | None,
     bloom_bitmaps: DataFrame | None = None,
     seen_exact: DataFrame | None,
@@ -225,6 +190,7 @@ def _annotate_round(
 ) -> DataFrame:
     """One plan: robots -> dedup -> seen -> politeness, as a status column.
 
+    ``robots`` is the run's gate (None: every URL allowed).
     ``frontier_rows`` is the driver's (free, observation-derived)
     estimate of this round's frontier size: it picks the seen-confirm
     join and the politeness tier."""
@@ -253,28 +219,8 @@ def _annotate_round(
             F.concat(F.lit("frontier domain != f(url_canon): "),
                      F.col("url"))).isNull())
 
-    if robots_df is not None:
-        # cogroup gate: each task receives exactly its domains' rules —
-        # no driver collect, no whole-table broadcast (the
-        # million-domain robots path)
-        from siren_spark.operators.robots import robots_annotate_cogroup
-        df = robots_annotate_cogroup(df, robots_df)
-    elif matcher_bc is not None:
-        # matcher broadcast ONCE by run_crawl (it is constant across the
-        # run — re-broadcasting per round would pay a driver-side pickle
-        # + transfer on every one of thousands of rounds, pure serial
-        # per-round cost); here we only reference the handle
-        bc = matcher_bc
-
-        @F.pandas_udf("boolean")
-        def allowed_udf(domains: pd.Series, urls: pd.Series) -> pd.Series:
-            return pd.Series(bc.value.allowed_batch(domains, urls),
-                             dtype=bool)
-
-        df = df.withColumn("__allowed",
-                           allowed_udf(F.col("domain"), F.col("url_canon")))
-    else:
-        df = df.withColumn("__allowed", F.lit(True))
+    df = (robots.annotate(df) if robots is not None
+          else df.withColumn("__allowed", F.lit(True)))
 
     df = df.withColumn(
         "__salt", F.pmod(F.xxhash64("url_canon"), F.lit(cfg.salt_buckets)))
@@ -335,7 +281,7 @@ def _annotate_round(
         # so the upstream (gate UDF + window + probe) runs once
         df = _cache(df)
         if frontier_rows is not None \
-                and frontier_rows <= cfg.broadcast_fetch_max:
+                and frontier_rows <= BROADCAST_FETCH_MAX:
             # INVERTED confirm: broadcast the maybe-sliver keys into the
             # seen scan (left-semi) and the tiny hit-set back onto the
             # frontier. The (big, O(crawl-history)) seen table streams
@@ -437,8 +383,8 @@ def _apply_result_filters(
     # ONLY dedup-source rows pay the (source, title) window shuffle —
     # mirror/toi/nm records stream through untouched (at 100x scale the
     # whole-round window was the largest avoidable shuffle in the
-    # results path). ``hl_seen`` (scope='run') is the cross-round
-    # done-set: titles already emitted by an earlier round anti-join out,
+    # results path). ``hl_seen`` is the cross-round done-set (None in
+    # round 0): titles already emitted by an earlier round anti-join out,
     # matching the reference's scrape()-spanning set (ht.py:261-268).
     is_dedup_src = F.col("source").isin(*HEADLINE_DEDUP_SOURCES)
     rest = out.filter(~is_dedup_src)
@@ -664,32 +610,11 @@ def run_crawl(
     store = CheckpointStore(checkpoint_dir)
     pages_p = prepare_pages(pages)
 
-    matcher = None
-    robots_df = None
-    if robots is not None:
-        probe = cfg.robots_probe
-        if probe == "auto":
-            # never collect a huge rules table: probe the size with a
-            # LIMIT'd count (O(threshold) scan, no driver materialization)
-            over = (robots.limit(cfg.robots_broadcast_max + 1).count()
-                    > cfg.robots_broadcast_max)
-            probe = "cogroup" if over else "broadcast"
-        if probe == "cogroup":
-            robots_df = robots
-        else:
-            matcher = RobotsMatcher(
-                [(r["domain"], r["rules"]) for r in robots.collect()])
-    # broadcast the compiled matcher ONCE for the whole run — it is
-    # constant across rounds, and a per-round broadcast would re-pickle
-    # and re-ship it thousands of times (serial cost every cluster size
-    # pays, i.e. exactly the term the N->4N scaling ratio punishes)
-    matcher_bc = (spark.sparkContext.broadcast(matcher)
-                  if matcher is not None else None)
-
     bloom: BloomFilter | None = None
     bloom_bitmaps: DataFrame | None = None   # bucketed-probe bitmap table
     seen_exact: DataFrame | None = None
-    bucketed = cfg.use_bloom and cfg.bloom_bucketed()
+    bucketed = cfg.use_bloom and bloom_bucketed(cfg.bloom_bits,
+                                                cfg.bloom_buckets)
 
     def _build_delta_bloom(delta: DataFrame) -> BloomFilter:
         return build_bloom(delta, "url_canon",
@@ -708,8 +633,7 @@ def run_crawl(
         frontier = _frontier_after(spark, store, last)
         seen_sources = _seen_sources_at(store, last)
         seen_exact = _seen_df(spark, seen_sources)
-        if cfg.headline_dedup_scope == "run":
-            hl_sources = _hl_sources_at(store, last)
+        hl_sources = _hl_sources_at(store, last)
         if cfg.use_bloom and seen_exact is not None:
             if bucketed:
                 bloom_path = store.manifest(last)["stats"].get("bloom_table")
@@ -753,8 +677,7 @@ def run_crawl(
         next-round annotate passes the round's staged-but-uncommitted
         table, which commits before that annotate is consumed)."""
         caches: list = []
-        ann = _annotate_round(frontier_, cfg=cfg, matcher_bc=matcher_bc,
-                              robots_df=robots_df,
+        ann = _annotate_round(frontier_, cfg=cfg, robots=gate,
                               bloom=bloom_,
                               bloom_bitmaps=(bloom_bitmaps_
                                              if bloom_bitmaps_ is not None
@@ -786,6 +709,9 @@ def run_crawl(
     # can never be queued behind it (a same-pool wait on a queued task
     # would deadlock).
     pool = ThreadPoolExecutor(max_workers=8)
+    # the robots gate (operators/robots.py) is built once per run: at
+    # most one matcher broadcast, released in the finally below
+    gate = RobotsGate(robots) if robots is not None else None
 
     try:
         for gen in range(start_gen, cfg.max_rounds):
@@ -846,9 +772,10 @@ def run_crawl(
             # ---- job 2: fetch-join + single-pass extract --------------------
             # Scheduled keys broadcast into a hash join against the pages
             # store: the (big) pages side never shuffles. Above the broadcast
-            # threshold — as at true 10^10 scale — fall back to co-partitioned
-            # SMJ where only the scheduled side shuffles (pages were
-            # partitioned on url_canon at ingest).
+            # threshold — as at true 10^10 scale — fall back to SMJ, which
+            # shuffles both sides: a plain parquet corpus carries no
+            # partitioning. A corpus bucketed on url_canon at ingest
+            # (fetch_join='bucketed') keeps the pages side in place.
             t1 = time.time()
             fetch_side = sched.select("url", "url_canon", "meta")
             n_sched = n_by_status.get("scheduled", 0)
@@ -859,20 +786,12 @@ def run_crawl(
                 # broadcast build, no corpus exchange, no sort
                 fetched = pages_p.join(fetch_side.hint("shuffle_hash"),
                                        "url_canon", "inner")
-            elif cfg.fetch_join == "broadcast" or \
-                    n_sched <= cfg.broadcast_fetch_max:
+            elif n_sched <= BROADCAST_FETCH_MAX:
                 fetched = pages_p.join(F.broadcast(fetch_side), "url_canon",
                                        "inner")
             else:
                 fetched = fetch_side.join(pages_p, "url_canon", "inner")
             fetch_in = fetched.select("url", "html", "meta")
-            if cfg.payload_projection:
-                proj = F.expr(cfg.payload_projection)
-                fetch_in = fetch_in.select(
-                    "url",
-                    F.when(F.length(proj) > 0, proj.cast("binary"))
-                     .otherwise(F.col("html")).alias("html"),
-                    "meta")
             # the discovered-link count rides the write as an Observation:
             # links + this round's deferred = next round's frontier size,
             # the (free) estimate the seen-confirm strategy keys on
@@ -890,13 +809,11 @@ def run_crawl(
 
             # ---- cheap derivations from the two committed tables ------------
             t2 = time.time()
-            hl_seen = (_hl_seen_df(spark, hl_sources)
-                       if cfg.headline_dedup_scope == "run" else None)
             results_round = _apply_result_filters(
                 ex.filter(F.col("kind") == "record").drop("kind", "meta")
                   .withColumn("gen", F.lit(gen)),
                 cfg,
-                hl_seen=hl_seen,
+                hl_seen=_hl_seen_df(spark, hl_sources),
             ).select(*RESULT_COLS)
             if cfg.lang_detect:
                 from siren_spark.functions.langid import langid_udf
@@ -991,20 +908,18 @@ def run_crawl(
                     store.stage_table, gen, "seen_compact",
                     _seen_df(spark, seen_sources))
             hl_fut = None
-            hl_sources_next = hl_sources
-            if cfg.headline_dedup_scope == "run":
-                hl_sources_next = hl_sources + [
-                    {"path": os.path.join(store._gen_dir(gen), "results"),
-                     "kind": "res"}]
-                if len(hl_sources_next) > cfg.seen_compact_every:
+            hl_sources_next = hl_sources + [
+                {"path": os.path.join(store._gen_dir(gen), "results"),
+                 "kind": "res"}]
+            if len(hl_sources_next) > cfg.seen_compact_every:
 
-                    def _stage_hl_compact() -> str:
-                        futs["results"].result()   # read-after-write dep
-                        return store.stage_table(
-                            gen, "hl_compact",
-                            _hl_seen_df(spark, hl_sources_next))
+                def _stage_hl_compact() -> str:
+                    futs["results"].result()   # read-after-write dep
+                    return store.stage_table(
+                        gen, "hl_compact",
+                        _hl_seen_df(spark, hl_sources_next))
 
-                    hl_fut = pool.submit(_stage_hl_compact)
+                hl_fut = pool.submit(_stage_hl_compact)
             # round pipelining: round N+1's annotate depends only on round
             # N's STAGED tables and the Bloom state, not on the derived
             # writes, so it runs concurrently with them — taking the ~flat
@@ -1033,19 +948,16 @@ def run_crawl(
                 compact_path = compact_fut.result()
                 seen_sources = [{"path": compact_path, "kind": "compact"}]
                 staged_tables.append("seen_compact")
-            if cfg.headline_dedup_scope == "run":
-                hl_sources = hl_sources_next
-                if hl_fut is not None:
-                    hl_path = hl_fut.result()
-                    hl_sources = [{"path": hl_path, "kind": "compact"}]
-                    staged_tables.append("hl_compact")
+            hl_sources = hl_sources_next
+            if hl_fut is not None:
+                hl_sources = [{"path": hl_fut.result(), "kind": "compact"}]
+                staged_tables.append("hl_compact")
 
             stats: dict = {
                 "by_status": {k: int(v) for k, v in n_by_status.items()},
                 "seen_sources": seen_sources,
+                "hl_seen_sources": hl_sources,
             }
-            if cfg.headline_dedup_scope == "run":
-                stats["hl_seen_sources"] = hl_sources
             if bucketed:
                 # bucketed filter state: the round's delta partials were
                 # OR-merged into the running bitmap table and staged from
@@ -1104,11 +1016,13 @@ def run_crawl(
         # ignores and cleans.
         pool.shutdown(wait=False, cancel_futures=True)
         raise
+    finally:
+        # on every exit path: returned frames are all parquet-backed (no
+        # live plan holds the gate UDF), and an in-flight pre-stage of a
+        # failed run re-reads the matcher from the driver
+        if gate is not None:
+            gate.release()
     pool.shutdown(wait=True)
-    if matcher_bc is not None:
-        # returned frames are all parquet-backed (no live plan holds the
-        # gate UDF), so the broadcast can be released eagerly
-        matcher_bc.unpersist()
     last = store.latest_gen()
     # reclaim any staged-but-never-committed gen dir (an inline annotate
     # of a frontier that turned out empty, or a prestage raced by an

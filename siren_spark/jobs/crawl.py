@@ -19,6 +19,14 @@ Politeness ranks keys per (domain, salt) bucket; with the default 64
 salt buckets, ``--budget`` above 65536 (64 x budget > 2^22 keys)
 switches to the distributed range-rank tier, whose per-task memory stays
 bounded at any budget.
+
+The scale paths are chosen from observed sizes, with no flag: a robots
+table over 100,000 rows is cogrouped with the frontier instead of
+broadcast (operators/robots.py ``ROBOTS_BROADCAST_MAX``), and a Bloom
+filter over 64 MiB (``--bloom-bits / 8 x --bloom-buckets``) lives as a
+bucketed checkpoint table (operators/seen.py
+``BLOOM_BROADCAST_MAX_BYTES``). HT headlines are deduplicated across
+the whole crawl, as the reference's scrape()-wide done-set does.
 """
 
 from __future__ import annotations
@@ -60,20 +68,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument("--bloom-bits", type=int, default=1 << 20)
     p.add_argument("--bloom-buckets", type=int, default=64)
     p.add_argument("--no-bloom", action="store_true")
-    p.add_argument("--bloom-probe", default="auto",
-                   choices=["auto", "broadcast", "bucketed"],
-                   help="bucketed = per-task one-bucket bitmap cogroup "
-                        "(the 10^10 path); auto switches above 64 MB")
-    p.add_argument("--robots-probe", default="auto",
-                   choices=["auto", "broadcast", "cogroup"],
-                   help="cogroup = per-domain rules shipped by shuffle "
-                        "(million-domain robots tables); auto switches "
-                        "above --robots-broadcast-max rows")
-    p.add_argument("--robots-broadcast-max", type=int, default=100_000)
-    p.add_argument("--headline-dedup-scope", default="run",
-                   choices=["run", "round"],
-                   help="'run' carries the (source, title) done-set "
-                        "across rounds (reference scrape() semantics)")
     p.add_argument("--seen-compact-every", type=int, default=8)
     p.add_argument("--resume", action="store_true")
     p.add_argument("--verbose", action="store_true")
@@ -142,10 +136,6 @@ def main(argv: list[str] | None = None) -> None:
         use_bloom=not args.no_bloom,
         bloom_bits=args.bloom_bits,
         bloom_buckets=args.bloom_buckets,
-        bloom_probe=args.bloom_probe,
-        robots_probe=args.robots_probe,
-        robots_broadcast_max=args.robots_broadcast_max,
-        headline_dedup_scope=args.headline_dedup_scope,
         seen_compact_every=args.seen_compact_every,
         window_start=datetime.fromisoformat(args.start) if args.start else None,
         window_end=datetime.fromisoformat(args.end) if args.end else None,

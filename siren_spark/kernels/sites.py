@@ -95,35 +95,6 @@ def _rec(source: str, url: str, *, title=None, author=None, location=None,
 _LDJSON_OPEN = re.compile(r"<script\s+type=([\"'])application/ld\+json\1\s*>")
 _SCRIPT_CLOSE = re.compile(r"</\s*script", re.I)
 
-# JVM-side payload pre-projection for CrawlConfig.payload_projection:
-# reduces a mirror ARTICLE page to just its first ld+json script element
-# (the only thing mirror_parse reads from one) before the Arrow
-# crossing. Payload-preserving by construction: the emitted fragment's
-# first ld+json script has the byte-identical body the kernel's tree
-# walk would return, and the guards are STRICTLY STRONGER than
-# _first_ldjson's fallback conditions — the plainly-shaped ld+json
-# script must be the page's first '<script', the first 'ld+json'
-# mention, and precede any '<!--' or '<style'; any ambiguity yields ''
-# and the full payload crosses as before. All guards are linear instr()
-# scans (no backtracking regex over 20 KB payloads).
-_P = "CAST(html AS STRING)"
-_OPEN = "'<script type=\"application/ld+json\">'"
-MIRROR_LDJSON_PROJECTION = f"""
-CASE WHEN url LIKE '%/news/story-%'
-      AND instr({_P}, {_OPEN}) > 0
-      AND instr({_P}, '<script') = instr({_P}, {_OPEN})
-      AND instr({_P}, 'ld+json') = instr({_P}, {_OPEN}) + 26
-      AND (instr({_P}, '<!--') = 0
-           OR instr({_P}, '<!--') > instr({_P}, {_OPEN}))
-      AND (instr({_P}, '<style') = 0
-           OR instr({_P}, '<style') > instr({_P}, {_OPEN}))
-      AND instr({_P}, '</script') > instr({_P}, {_OPEN})
-THEN concat(substring({_P}, instr({_P}, {_OPEN}),
-                      instr({_P}, '</script') - instr({_P}, {_OPEN})),
-            '</script>')
-ELSE '' END
-"""
-
 
 def _first_ldjson(payload: str) -> str | None:
     """Body of the first ld+json script, or None to use the tree walk."""

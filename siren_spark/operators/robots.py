@@ -7,8 +7,9 @@ groups for ``User-agent: *``; empty Disallow value allows everything; a
 domain with no robots row is fully allowed (§2.3.1.2: unavailable →
 unrestricted). '*' wildcards and '$' anchors are supported.
 
-The rules table is tiny (one row per domain) → parsed once, broadcast,
-matched inside a vectorized pandas UDF.
+A rules table of up to ``ROBOTS_BROADCAST_MAX`` rows is parsed once,
+broadcast, and matched inside a vectorized pandas UDF; a larger one is
+cogrouped with the frontier by domain (:class:`RobotsGate`).
 """
 
 from __future__ import annotations
@@ -169,35 +170,58 @@ def robots_annotate_cogroup(
             .applyInPandas(probe, out_schema))
 
 
-def robots_gate(
-    frontier: DataFrame,
-    robots: DataFrame | None,
-    *,
-    url_col: str = "url_canon",
-    domain_col: str = "domain",
-) -> tuple[DataFrame, DataFrame]:
-    """Split frontier into (allowed, blocked) by robots rules.
+# rule-row count up to which the gate collects the table and broadcasts
+# one compiled matcher; above it the rules cogroup with the frontier (a
+# million-domain rules table must never be collected to the driver)
+ROBOTS_BROADCAST_MAX = 100_000
 
-    ``robots`` schema: (domain string, rules string). None → all allowed.
+
+class RobotsGate:
+    """The robots gate of one crawl run, built once per run.
+
+    Picks the delivery from a LIMIT'd count of the rules table (an
+    O(threshold) scan, no driver materialization): up to
+    ``ROBOTS_BROADCAST_MAX`` rows it collects the table and broadcasts
+    the compiled matcher ONCE for the whole run — the matcher is
+    constant across rounds, and a per-round broadcast would re-pickle
+    and re-ship it every round; above it every round cogroups the
+    frontier with the rules (:func:`robots_annotate_cogroup`).
+    ``robots`` schema: (domain string, rules string).
     """
-    if robots is None:
-        return frontier, frontier.limit(0)
-    rows = [(r["domain"], r["rules"]) for r in robots.collect()]
-    matcher = RobotsMatcher(rows)
-    bc = frontier.sparkSession.sparkContext.broadcast(matcher)
 
-    @F.pandas_udf("boolean")
-    def allowed_udf(domains: pd.Series, urls: pd.Series) -> pd.Series:
-        m = bc.value
-        return pd.Series(m.allowed_batch(domains, urls), dtype=bool)
+    def __init__(self, robots: DataFrame):
+        self._rules: DataFrame | None = None
+        self._bc = None
+        if (robots.limit(ROBOTS_BROADCAST_MAX + 1).count()
+                > ROBOTS_BROADCAST_MAX):
+            self._rules = robots
+        else:
+            matcher = RobotsMatcher(
+                [(r["domain"], r["rules"]) for r in robots.collect()])
+            self._bc = robots.sparkSession.sparkContext.broadcast(matcher)
 
-    gated = frontier.withColumn(
-        "__allowed", allowed_udf(F.col(domain_col), F.col(url_col))
-    )
-    allowed = gated.filter(F.col("__allowed")).drop("__allowed")
-    blocked = gated.filter(~F.col("__allowed")).drop("__allowed")
-    return allowed, blocked
+    def annotate(self, frontier: DataFrame) -> DataFrame:
+        """Add boolean ``__allowed`` to a frame with ``domain`` and
+        ``url_canon`` columns."""
+        if self._rules is not None:
+            return robots_annotate_cogroup(frontier, self._rules)
+        bc = self._bc
+
+        @F.pandas_udf("boolean")
+        def allowed_udf(domains: pd.Series, urls: pd.Series) -> pd.Series:
+            return pd.Series(bc.value.allowed_batch(domains, urls),
+                             dtype=bool)
+
+        return frontier.withColumn(
+            "__allowed", allowed_udf(F.col("domain"), F.col("url_canon")))
+
+    def release(self) -> None:
+        """Release the matcher broadcast. Call once no live plan holds
+        the gate (frames written to parquet no longer do)."""
+        if self._bc is not None:
+            self._bc.unpersist()
+            self._bc = None
 
 
-__all__ = ["parse_robots", "RobotsMatcher", "robots_gate",
-           "robots_annotate_cogroup"]
+__all__ = ["parse_robots", "RobotsMatcher", "RobotsGate",
+           "ROBOTS_BROADCAST_MAX", "robots_annotate_cogroup"]

@@ -15,7 +15,8 @@ Design notes for cluster scale:
 - the filter is bucketed by ``hash % buckets``. Two probe paths:
   * **broadcast** (small filters): partials OR-combine on the driver and
     the whole filter broadcasts — every executor holds all buckets.
-    Right up to ~tens of MB of total bitmap; beyond that it is NOT the
+    Right up to ~tens of MB of total bitmap (the crawl switches above
+    ``BLOOM_BROADCAST_MAX_BYTES``); beyond that it is NOT the
     scale path (10^10 URLs needs ~12.5 GB of bitmap, and broadcasting
     that to every executor — or OR-merging it on the driver — is
     exactly the bottleneck bucketing is supposed to avoid).
@@ -40,6 +41,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _SEED2 = 0x9E3779B9  # second hash = xxhash64(col, seed2) for double hashing
+# total bitmap bytes up to which the crawl keeps a driver-side filter
+# and broadcasts it; above this the filter lives as a (bucket, bitmap)
+# table and the probe cogroups (``bloom_bucketed``)
+BLOOM_BROADCAST_MAX_BYTES = 64 << 20
+
+
+def bloom_bucketed(bits_per_bucket: int, buckets: int) -> bool:
+    """Whether a filter of this shape takes the bucketed path: its
+    total bitmap exceeds ``BLOOM_BROADCAST_MAX_BYTES``."""
+    return (bits_per_bucket // 8) * buckets > BLOOM_BROADCAST_MAX_BYTES
 
 
 @dataclass
@@ -294,6 +305,6 @@ def filter_unseen(
     return definite_new.unionByName(confirmed_new)
 
 
-__all__ = ["BloomFilter", "build_bloom", "build_bloom_partials",
-           "or_reduce_bitmaps", "probe_bloom_broadcast", "probe_bloom_bucketed",
-           "filter_unseen"]
+__all__ = ["BloomFilter", "BLOOM_BROADCAST_MAX_BYTES", "bloom_bucketed",
+           "build_bloom", "build_bloom_partials", "or_reduce_bitmaps",
+           "probe_bloom_broadcast", "probe_bloom_bucketed", "filter_unseen"]

@@ -31,13 +31,13 @@ class PageStore:
 
 
 class ParquetPageStore(PageStore):
-    """Parquet-backed store. ``buckets`` emulates Iceberg's
-    bucket(N, url_canon) by repartitioning on write so fetch joins can
-    use the SMJ path without reshuffling the corpus."""
+    """Plain parquet store. Its reads carry no partitioning, so a fetch
+    join that cannot broadcast shuffles the corpus; a corpus that must
+    stay in place is bucketed at ingest
+    (:class:`BucketedParquetPageStore`)."""
 
-    def __init__(self, path: str, buckets: int | None = None):
+    def __init__(self, path: str):
         self.path = path
-        self.buckets = buckets
 
     def read(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.path)
@@ -45,8 +45,6 @@ class ParquetPageStore(PageStore):
     def write(self, df: DataFrame) -> None:
         if "url_canon" not in df.columns:
             df = df.withColumn("url_canon", canonicalize_udf(F.col("url")))
-        if self.buckets:
-            df = df.repartition(self.buckets, "url_canon")
         df.write.mode("overwrite").parquet(self.path)
 
 

@@ -179,15 +179,67 @@ def test_robots_gating(spark, site, tmp_path, monkeypatch):
     assert res.results.filter(F.col("source") == "mirror").count() == 0
 
 
-def test_bucketed_bloom_equals_broadcast(spark, site, tmp_path, engine):
+def test_robots_broadcast_released_when_run_fails(spark, site, tmp_path,
+                                                   monkeypatch):
+    """A run that stops with an error (here the simulated kill after
+    round 0) must still release the matcher broadcast — otherwise each
+    failed run leaves one behind in the session."""
+    from pyspark.broadcast import Broadcast
+
+    from siren_spark.operators.robots import RobotsMatcher
+
+    robots = spark.createDataFrame(
+        [("mirror-city.example", "User-agent: *\nDisallow: /\n")],
+        "domain string, rules string",
+    )
+    matcher_bcs, released = [], []
+    real_broadcast = spark.sparkContext.broadcast
+    real_unpersist = Broadcast.unpersist
+
+    def broadcast(v):
+        bc = real_broadcast(v)
+        if isinstance(v, RobotsMatcher):
+            matcher_bcs.append(bc)
+        return bc
+
+    def unpersist(self, *a, **k):
+        released.append(self)
+        return real_unpersist(self, *a, **k)
+
+    monkeypatch.setattr(spark.sparkContext, "broadcast", broadcast)
+    monkeypatch.setattr(Broadcast, "unpersist", unpersist)
+    cfg = CrawlConfig(budget_per_host=BUDGET, window_start=WINDOW_START,
+                      window_end=WINDOW_END, keywords=SPEC.keywords,
+                      use_bloom=False, max_rounds=3)
+    with pytest.raises(RuntimeError, match="simulated kill"):
+        run_crawl(spark, pages_df(spark, site.pages),
+                  seeds_df(spark, site.seeds), cfg, str(tmp_path / "ckf"),
+                  robots=robots, fail_after_round=0)
+    assert len(matcher_bcs) == 1
+    assert any(b is matcher_bcs[0] for b in released)
+
+
+def test_crawl_config_rejects_unknown_fetch_join():
+    """A misspelt fetch_join must fail at construction, not silently
+    run another join; 'broadcast' is no longer a strategy."""
+    for bad in ("bucket", "broadcast", ""):
+        with pytest.raises(ValueError, match="fetch_join"):
+            CrawlConfig(fetch_join=bad)
+    for ok in ("auto", "bucketed"):
+        assert CrawlConfig(fetch_join=ok).fetch_join == ok
+
+
+def test_bucketed_bloom_equals_broadcast(spark, site, tmp_path, engine,
+                                         monkeypatch):
     """The bucketed (cogroup) Bloom probe path crawls identically to the
     broadcast path — and its bitmap table is committed/resumable."""
+    from siren_spark.operators import seen
     from siren_spark.operators.checkpoint import CheckpointStore
+    monkeypatch.setattr(seen, "BLOOM_BROADCAST_MAX_BYTES", 0)
     cfg = CrawlConfig(
         budget_per_host=BUDGET, window_start=WINDOW_START,
         window_end=WINDOW_END, keywords=SPEC.keywords,
         use_bloom=True, bloom_bits=1 << 16, bloom_buckets=4, salt_buckets=4,
-        bloom_probe="bucketed",
     )
     ckpt = str(tmp_path / "ckb")
     res = run_crawl(spark, pages_df(spark, site.pages),
@@ -217,18 +269,24 @@ def test_ht_headline_dedup(engine, site):
     assert len(ht) < len(exp_ht)
 
 
-def test_robots_cogroup_crawl_equals_broadcast(spark, site, tmp_path):
+def test_robots_cogroup_crawl_equals_broadcast(spark, site, tmp_path,
+                                               monkeypatch):
     """The cogroup robots gate produces the identical crawl to the
     broadcast matcher path (same blocked set, same results)."""
+    from siren_spark.operators import robots as robots_mod
+
     robots = spark.createDataFrame(
         [("mirror-city.example", "User-agent: *\nDisallow: /\n")],
         "domain string, rules string",
     )
     outs = []
-    for probe in ("broadcast", "cogroup"):
+    # 1 rule row: broadcast under the default bound, cogroup under 0
+    for probe, bound in (("broadcast", robots_mod.ROBOTS_BROADCAST_MAX),
+                         ("cogroup", 0)):
+        monkeypatch.setattr(robots_mod, "ROBOTS_BROADCAST_MAX", bound)
         cfg = CrawlConfig(budget_per_host=BUDGET, window_start=WINDOW_START,
                           window_end=WINDOW_END, keywords=SPEC.keywords,
-                          use_bloom=False, max_rounds=3, robots_probe=probe)
+                          use_bloom=False, max_rounds=3)
         res = run_crawl(spark, pages_df(spark, site.pages),
                         seeds_df(spark, site.seeds),
                         cfg, str(tmp_path / f"ck_{probe}"), robots=robots)
@@ -240,23 +298,29 @@ def test_robots_cogroup_crawl_equals_broadcast(spark, site, tmp_path):
     assert outs[0] == outs[1]
 
 
-def test_scale_paths_combined_equal_defaults(spark, site, tmp_path):
+def test_scale_paths_combined_equal_defaults(spark, site, tmp_path,
+                                             monkeypatch):
     """bucketed Bloom + cogroup robots TOGETHER (the full 10^10
     configuration) crawl identically to the broadcast defaults."""
+    from siren_spark.operators import robots as robots_mod
+    from siren_spark.operators import seen
+
     robots = spark.createDataFrame(
         [("mirror-city.example", "User-agent: *\nDisallow: /\n")],
         "domain string, rules string",
     )
     outs = []
-    for probe in ({"robots_probe": "broadcast", "bloom_probe": "broadcast"},
-                  {"robots_probe": "cogroup", "bloom_probe": "bucketed"}):
+    for mode in ("broadcast", "bucketed"):
+        if mode == "bucketed":
+            monkeypatch.setattr(robots_mod, "ROBOTS_BROADCAST_MAX", 0)
+            monkeypatch.setattr(seen, "BLOOM_BROADCAST_MAX_BYTES", 0)
         cfg = CrawlConfig(budget_per_host=BUDGET, window_start=WINDOW_START,
                           window_end=WINDOW_END, keywords=SPEC.keywords,
                           use_bloom=True, bloom_bits=1 << 16, bloom_buckets=4,
-                          salt_buckets=4, max_rounds=3, **probe)
+                          salt_buckets=4, max_rounds=3)
         res = run_crawl(spark, pages_df(spark, site.pages),
                         seeds_df(spark, site.seeds),
-                        cfg, str(tmp_path / f"ck_{probe['bloom_probe']}"),
+                        cfg, str(tmp_path / f"ck_{mode}"),
                         robots=robots)
         outs.append(sorted(_result_key(r.asDict())
                            for r in res.results.collect()))
@@ -267,35 +331,37 @@ def test_headline_dedup_spans_rounds(spark, tmp_path):
     """A3 cross-round scope: the reference's done-set spans the whole
     scrape() (ht.py:261-268). HT-only crawl with a budget small enough
     that the duplicated-headline detail pages are fetched in DIFFERENT
-    rounds: scope='run' emits one record per title for the whole run
-    and matches the oracle simulator; scope='round' (the pre-round-3
-    semantic) re-emits the title in the later round."""
+    rounds: the crawl emits one record per title for the whole run and
+    matches the oracle simulator."""
+    from siren_spark.operators.checkpoint import CheckpointStore
+
     site = build_site(SPEC)
     ht_seeds = [s for s in site.seeds if s["source"] == "ht"]
-    outs = {}
-    for scope in ("run", "round"):
-        cfg = CrawlConfig(budget_per_host=3, window_start=WINDOW_START,
-                          window_end=WINDOW_END, keywords=SPEC.keywords,
-                          use_bloom=False, salt_buckets=2,
-                          headline_dedup_scope=scope)
-        res = run_crawl(spark, pages_df(spark, site.pages),
-                        seeds_df(spark, ht_seeds), cfg,
-                        str(tmp_path / f"ck_{scope}"))
-        outs[scope] = [r.asDict() for r in res.results.collect()]
-    run_titles = [r["title"] for r in outs["run"]]
-    assert len(run_titles) == len(set(run_titles))
-    # the fixture actually exercises the cross-round case: round-scope
-    # re-emits at least one title in a later gen
-    assert len(outs["round"]) > len(outs["run"])
+    cfg = CrawlConfig(budget_per_host=3, window_start=WINDOW_START,
+                      window_end=WINDOW_END, keywords=SPEC.keywords,
+                      use_bloom=False, salt_buckets=2)
+    ckpt = str(tmp_path / "ck_run")
+    res = run_crawl(spark, pages_df(spark, site.pages),
+                    seeds_df(spark, ht_seeds), cfg, ckpt)
+    out = [r.asDict() for r in res.results.collect()]
+    titles = [r["title"] for r in out]
+    assert len(titles) == len(set(titles))
+    # the fixture actually exercises the cross-round case: some HT title
+    # is extracted (before the headline dedup) in two different gens
+    store = CheckpointStore(ckpt)
     by_title: dict[str, set] = {}
-    for r in outs["round"]:
-        by_title.setdefault(r["title"], set()).add(r["gen"])
+    for gen in range(res.rounds):
+        for r in (store.read(spark, gen, "extracted")
+                  .filter((F.col("kind") == "record")
+                          & (F.col("source") == "ht"))
+                  .select("title").collect()):
+            by_title.setdefault(r.title, set()).add(gen)
     assert any(len(g) > 1 for g in by_title.values())
-    # and the run-scope engine matches the oracle simulator exactly
+    # and the engine matches the oracle simulator exactly
     sim2 = simulate_crawl(site.pages, ht_seeds, budget_per_host=3,
                           window_start=WINDOW_START, window_end=WINDOW_END,
                           keywords=SPEC.keywords)
-    got = sorted(_result_key(r) for r in outs["run"])
+    got = sorted(_result_key(r) for r in out)
     exp = sorted(_result_key(r) for r in sim2.results)
     assert got == exp
 
@@ -379,23 +445,23 @@ def test_counters_fallback_for_legacy_checkpoints(spark, tmp_path):
 
 
 def test_robots_auto_switches_to_cogroup(spark, site, tmp_path, monkeypatch):
-    """robots_probe='auto' must not collect a rules table above the
+    """The robots gate must not collect a rules table above the
     broadcast threshold: RobotsMatcher (the broadcast path) is never
     constructed; the cogroup gate produces the same blocked set."""
-    import siren_spark.crawl as crawl_mod
+    from siren_spark.operators import robots as robots_mod
 
     def boom(*a, **k):
         raise AssertionError("broadcast matcher built for a large table")
 
-    monkeypatch.setattr(crawl_mod, "RobotsMatcher", boom)
+    monkeypatch.setattr(robots_mod, "RobotsMatcher", boom)
+    monkeypatch.setattr(robots_mod, "ROBOTS_BROADCAST_MAX", 2)
     robots = spark.createDataFrame(
         [("mirror-city.example", "User-agent: *\nDisallow: /\n"),
          ("a.example", ""), ("b.example", ""), ("c.example", "")],
         "domain string, rules string")
     cfg = CrawlConfig(budget_per_host=BUDGET, window_start=WINDOW_START,
                       window_end=WINDOW_END, keywords=SPEC.keywords,
-                      use_bloom=False, max_rounds=2,
-                      robots_broadcast_max=2)   # 4 rows > 2 -> cogroup
+                      use_bloom=False, max_rounds=2)   # 4 rows > 2 -> cogroup
     res = run_crawl(spark, pages_df(spark, site.pages),
                     seeds_df(spark, site.seeds), cfg,
                     str(tmp_path / "ck_auto"), robots=robots)
@@ -420,54 +486,19 @@ def test_crawl_lang_detect_column(spark, site, tmp_path):
     assert rows and all(r.lang == classify(r.text) for r in rows)
 
 
-def test_payload_projection_equivalence(spark, site, engine, tmp_path_factory):
-    """CrawlConfig.payload_projection with the mirror ld+json projection
-    must leave every observable crawl output byte-identical: the JVM
-    pre-projection only shrinks what crosses the Arrow boundary, never
-    what the kernels produce."""
-    from siren_spark.kernels.sites import MIRROR_LDJSON_PROJECTION
-
-    cfg = CrawlConfig(
-        budget_per_host=BUDGET, window_start=WINDOW_START,
-        window_end=WINDOW_END, keywords=SPEC.keywords,
-        use_bloom=True, bloom_bits=1 << 16, bloom_buckets=4, salt_buckets=4,
-        payload_projection=MIRROR_LDJSON_PROJECTION,
-    )
-    ckpt = str(tmp_path_factory.mktemp("ckpt_proj"))
-    proj = run_crawl(spark, pages_df(spark, site.pages),
-                     seeds_df(spark, site.seeds), cfg, ckpt)
-
-    a = sorted(_result_key(r.asDict()) for r in engine.results.collect())
-    b = sorted(_result_key(r.asDict()) for r in proj.results.collect())
-    assert a == b
-    ca = sorted((r.gen, r.domain or "", r.metric, r.n)
-                for r in engine.counters.collect())
-    cb = sorted((r.gen, r.domain or "", r.metric, r.n)
-                for r in proj.counters.collect())
-    assert ca == cb
-    sa = {r.url_canon for r in engine.seen.collect()}
-    sb = {r.url_canon for r in proj.seen.collect()}
-    assert sa == sb
-    # the projection must actually have fired on mirror articles —
-    # otherwise this test proves nothing
-    n_fired = (pages_df(spark, site.pages)
-               .withColumn("p", F.expr(MIRROR_LDJSON_PROJECTION))
-               .filter(F.length("p") > 0).count())
-    assert n_fired > 0
-
-
 def test_bucketed_pipeline_resume_equals_uninterrupted(
-        spark, site, engine, tmp_path):
+        spark, site, engine, tmp_path, monkeypatch):
     """Round pipelining now stays effective in bucketed-bloom mode (the
     10^10-scale configuration): the round's bitmap table is staged in
     the overlap window and the prestaged next-round annotate reads it
     pre-commit. A kill mid-run must still resume to the byte-identical
     result set — the prestaged gen dir is uncommitted and rebuilt."""
+    from siren_spark.operators import seen
+    monkeypatch.setattr(seen, "BLOOM_BROADCAST_MAX_BYTES", 0)
     cfg = CrawlConfig(
         budget_per_host=BUDGET, window_start=WINDOW_START,
         window_end=WINDOW_END, keywords=SPEC.keywords,
         use_bloom=True, bloom_bits=1 << 16, bloom_buckets=4, salt_buckets=4,
-        bloom_probe="bucketed",
     )
     ckpt = str(tmp_path / "ckbp")
     with pytest.raises(RuntimeError, match="simulated kill"):
@@ -595,12 +626,13 @@ def test_politeness_rank_strategies_equivalent(spark, monkeypatch):
     assert sum(u.startswith("https://c") for u in sched) == 50
 
 
-def test_seen_split_confirm_equals_broadcast_confirm(spark):
-    """Above broadcast_fetch_max the maybe-seen confirm splits the
+def test_seen_split_confirm_equals_broadcast_confirm(spark, monkeypatch):
+    """Above BROADCAST_FETCH_MAX the maybe-seen confirm splits the
     frontier into definite-new and candidate rows and sort-merge-joins
     the candidates against the seen set; under it the candidate keys
     broadcast into the seen scan. Both must give every URL the same
     status."""
+    import siren_spark.crawl as crawl_mod
     from siren_spark.crawl import _annotate_round, _seeds_to_frontier
     from siren_spark.operators.seen import build_bloom
 
@@ -614,7 +646,11 @@ def test_seen_split_confirm_equals_broadcast_confirm(spark):
     bloom = build_bloom(seen, "url_canon",
                         bits_per_bucket=1 << 14, buckets=4)
 
-    def statuses(cfg):
+    default_max = crawl_mod.BROADCAST_FETCH_MAX
+
+    def statuses(fetch_max):
+        monkeypatch.setattr(crawl_mod, "BROADCAST_FETCH_MAX", fetch_max)
+        cfg = CrawlConfig(budget_per_host=20)
         caches: list = []
         ann = _annotate_round(fr, cfg=cfg, bloom=bloom, seen_exact=seen,
                               cache_registry=caches, frontier_rows=500)
@@ -624,9 +660,8 @@ def test_seen_split_confirm_equals_broadcast_confirm(spark):
             for c in caches:
                 c.unpersist()
 
-    split, split_caches = statuses(
-        CrawlConfig(budget_per_host=20, broadcast_fetch_max=0))
-    bcast, bcast_caches = statuses(CrawlConfig(budget_per_host=20))
+    split, split_caches = statuses(0)
+    bcast, bcast_caches = statuses(default_max)
     assert split == bcast
     # the split path really ran: it caches the re-unioned frame too
     assert len(split_caches) == len(bcast_caches) + 1

@@ -4,7 +4,9 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from siren_spark.operators.politeness import politeness_schedule
-from siren_spark.operators.robots import RobotsMatcher, parse_robots, robots_gate
+from siren_spark.operators.robots import (
+    RobotsGate, RobotsMatcher, parse_robots,
+)
 from siren_spark.operators.seen import build_bloom, filter_unseen, merge_blooms
 
 
@@ -66,7 +68,11 @@ def test_empty_disallow_allows_everything():
     assert parse_robots("User-agent: *\nDisallow:\n") == []
 
 
-def test_robots_gate_split(spark):
+def test_robots_gate_split(spark, monkeypatch):
+    """The crawl's robots gate flags the same rows whichever delivery
+    its rules-table size picks (broadcast matcher or cogroup)."""
+    from siren_spark.operators import robots as robots_mod
+
     robots = spark.createDataFrame(
         [("blocked.example", "User-agent: *\nDisallow: /\n")],
         "domain string, rules string")
@@ -74,9 +80,18 @@ def test_robots_gate_split(spark):
         ("https://blocked.example/a", "blocked.example", 1.0),
         ("https://open.example/a", "open.example", 1.0),
     ])
-    allowed, blocked = robots_gate(df, robots)
-    assert [r.domain for r in allowed.collect()] == ["open.example"]
-    assert [r.domain for r in blocked.collect()] == ["blocked.example"]
+    for bound in (robots_mod.ROBOTS_BROADCAST_MAX, 0):
+        monkeypatch.setattr(robots_mod, "ROBOTS_BROADCAST_MAX", bound)
+        gate = RobotsGate(robots)
+        try:
+            gated = gate.annotate(df)
+            allowed = gated.filter(F.col("__allowed")).drop("__allowed")
+            blocked = gated.filter(~F.col("__allowed")).drop("__allowed")
+            assert [r.domain for r in allowed.collect()] == ["open.example"]
+            assert [r.domain for r in blocked.collect()] == [
+                "blocked.example"]
+        finally:
+            gate.release()
 
 
 def test_bloom_no_false_negatives_and_merge(spark):

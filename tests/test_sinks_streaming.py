@@ -50,7 +50,7 @@ def test_parquet_page_store_roundtrip(spark, tmp_path):
           b"<p>hi</p>", "hi", "en")],
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
-    store = ParquetPageStore(str(tmp_path / "pages"), buckets=2)
+    store = ParquetPageStore(str(tmp_path / "pages"))
     store.write(df)
     back = store.read(spark)
     row = back.collect()[0]

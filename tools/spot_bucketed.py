@@ -1,13 +1,16 @@
 """Measured bucketed-bloom round time against the broadcast bloom.
 
-bloom_probe='bucketed' is the 10^10-URL configuration (the seen filter
+The bucketed Bloom filter is the 10^10-URL configuration (the seen filter
 lives as a distributed (bucket, bitmap) checkpoint table — no driver or
-single-executor copy). Its bitmap staging runs in the fetch+extract
-overlap window and the prestaged next-round annotate reads the staged
-(pre-commit) table, so rounds pipeline as in broadcast mode.
+single-executor copy). The crawl picks it once the total bitmap exceeds
+operators/seen.py BLOOM_BROADCAST_MAX_BYTES (64 MiB); this tool forces
+each mode by setting that constant, at the bench's 8 MiB filter. Its
+bitmap staging runs in the fetch+extract overlap window and the
+prestaged next-round annotate reads the staged (pre-commit) table, so
+rounds pipeline as in broadcast mode.
 
 This tool records the round-time evidence on the real bench web at one
-core level: the same crawl with bloom_probe='bucketed' and with the
+core level: the same crawl with the bucketed Bloom filter and with the
 broadcast-bloom reference, printing per-round wall times and steady
 throughput for both.
 
@@ -35,7 +38,12 @@ def _phase(master_cores: str, mode: str) -> None:
     from pyspark.sql import functions as F
 
     from siren_spark.crawl import CrawlConfig, run_crawl
+    from siren_spark.operators import seen
     from siren_spark.session import get_spark
+
+    # bucketed once the total bitmap exceeds this: 0 forces bucketed,
+    # an unreachable bound forces broadcast
+    seen.BLOOM_BROADCAST_MAX_BYTES = 0 if mode == "bucketed" else 1 << 62
 
     spark = get_spark(
         f"local[{master_cores}]", app_name="spot_bucketed",
@@ -50,7 +58,6 @@ def _phase(master_cores: str, mode: str) -> None:
         budget_per_host=1_000_000_000,
         salt_buckets=max(int(master_cores), 8),
         use_bloom=True, bloom_bits=1 << 22, bloom_buckets=16,
-        bloom_probe=("broadcast" if mode == "broadcast" else "bucketed"),
     )
     ckpt = tempfile.mkdtemp(prefix="siren_spotb_ckpt_")
     try:
