@@ -186,11 +186,15 @@ def _annotate_round(
     bloom_bitmaps: DataFrame | None = None,
     seen_exact: DataFrame | None,
     cache_registry: list | None = None,
+    broadcasts: list | None = None,
     frontier_rows: int | None = None,
 ) -> DataFrame:
     """One plan: robots -> dedup -> seen -> politeness, as a status column.
 
     ``robots`` is the run's gate (None: every URL allowed).
+    ``cache_registry`` and ``broadcasts`` collect the frames this plan
+    persists and the Bloom filter broadcast, for the caller to unpersist
+    once the plan is written.
     ``frontier_rows`` is the driver's (free, observation-derived)
     estimate of this round's frontier size: it picks the seen-confirm
     join and the politeness tier."""
@@ -250,7 +254,8 @@ def _annotate_round(
     # fusion exists to remove. Probing first keeps the WindowExec as
     # the cached plan's tail, whose partitioning the cache reports.
     if bloom_bcast:
-        df = probe_bloom_broadcast(df, bloom, "url_canon")
+        df = probe_bloom_broadcast(df, bloom, "url_canon",
+                                   broadcasts=broadcasts)
 
     # --- in-frontier dedup, FUSED into the politeness partition family:
     # domain and __salt are both functions of url_canon, so a url_canon
@@ -677,24 +682,30 @@ def run_crawl(
         next-round annotate passes the round's staged-but-uncommitted
         table, which commits before that annotate is consumed)."""
         caches: list = []
-        ann = _annotate_round(frontier_, cfg=cfg, robots=gate,
-                              bloom=bloom_,
-                              bloom_bitmaps=(bloom_bitmaps_
-                                             if bloom_bitmaps_ is not None
-                                             else bloom_bitmaps),
-                              seen_exact=seen_,
-                              cache_registry=caches,
-                              frontier_rows=frontier_rows_)
-        # per-status counts ride the write as Observation metrics — no
-        # second job over the staged parquet (part of the per-round
-        # fixed cost the N->4N scaling comparison pays at every level)
-        ann_obs = Observation(f"ann_{gen_}")
-        ann = ann.observe(ann_obs, *[
-            F.sum(F.when(F.col("status") == s, 1).otherwise(0)).alias(s)
-            for s in ("blocked", "deduped", "scheduled", "deferred")])
-        path = store.stage_table(gen_, "frontier_ann", ann)
-        for c in caches:
-            c.unpersist()
+        bcasts: list = []
+        try:
+            ann = _annotate_round(frontier_, cfg=cfg, robots=gate,
+                                  bloom=bloom_,
+                                  bloom_bitmaps=(bloom_bitmaps_
+                                                 if bloom_bitmaps_ is not None
+                                                 else bloom_bitmaps),
+                                  seen_exact=seen_,
+                                  cache_registry=caches,
+                                  broadcasts=bcasts,
+                                  frontier_rows=frontier_rows_)
+            # per-status counts ride the write as Observation metrics — no
+            # second job over the staged parquet (part of the per-round
+            # fixed cost the N->4N scaling comparison pays at every level)
+            ann_obs = Observation(f"ann_{gen_}")
+            ann = ann.observe(ann_obs, *[
+                F.sum(F.when(F.col("status") == s, 1).otherwise(0)).alias(s)
+                for s in ("blocked", "deduped", "scheduled", "deferred")])
+            path = store.stage_table(gen_, "frontier_ann", ann)
+        finally:
+            # the staged table is parquet-backed: no live plan needs the
+            # caches or the round's Bloom broadcast, on any exit path
+            for c in caches + bcasts:
+                c.unpersist()
         return path, {k: int(v) for k, v in ann_obs.get.items() if v}
 
     # pre-staged next-round annotate: {"gen", "path", "counts"}

@@ -10,14 +10,20 @@ every Python crossing here is Arrow-batched:
   discovered links + extracted records (split downstream by ``kind``),
   so each page's HTML is deserialized and parsed exactly once.
 
-Where the Python time goes: per TASK, not per row or per byte. Each
-Python task pays ~0.2 s of worker CPU before its first row (PySpark's
-per-task ``importlib.invalidate_caches()`` makes the zipimporters of
+Where the Python time goes: the fixed cost is per TASK, not per row
+or per byte. Under Spark's own worker daemon each Python task pays
+~0.25 s of worker CPU before its first row (PySpark's per-task
+``importlib.invalidate_caches()`` makes the zipimporters of
 ``pyspark.zip`` and the other worker-path archives re-read their
-directories). On a 4-vCPU host a drop-only ``mapInArrow`` costs ~1 /
-1.7 / 6 s of worker CPU at 4 / 8 / 32 tasks, and 262 MB of html through
-it adds <= 0.3 s. So a crawl's Python stages run as at most one task
-per core (``coalesce_to_cores``).
+directories); local sessions from ``session.get_spark`` start workers
+from ``siren_spark.worker_daemon``, which keeps those archives off the
+path, and a task then costs ~4 ms. On a 4-vCPU host a drop-only
+``mapInArrow`` at 4 / 8 / 32 tasks costs 0.08 / 0.10 / 0.12 s of worker
+CPU that way (1.1 / 2.1 / 7.8 s under Spark's daemon) but still
+1.1 / 1.1 / 1.6 s of wall time, and 262 MB of html through it adds
+<= 0.3 s. So a crawl's Python stages run as at most one task per core
+(``coalesce_to_cores``): the scheduling and shuffle-read cost of each
+extra task remains, and cluster deploys still pay the archive re-reads.
 """
 
 from __future__ import annotations
@@ -128,8 +134,9 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 def coalesce_to_cores(df: DataFrame) -> DataFrame:
     """``df`` in at most ``defaultParallelism`` partitions (one per
-    core), so a Python stage over it pays the per-task worker set-up
-    once per core instead of once per input partition. A coalesce
+    core), so a Python stage over it pays the per-task scheduling and
+    worker set-up once per core instead of once per input partition.
+    A coalesce
     never raises the partition count and adds no exchange: on a
     cluster where partitions ~ cores it is a no-op."""
     return df.coalesce(df.sparkSession.sparkContext.defaultParallelism)

@@ -10,6 +10,12 @@ Ship the package and run::
         --keywords crisis rescue --budget 50 \
         --start 2022-10-01 --end 2022-12-31 [--resume]
 
+The session runs on spark-submit's ``--master`` (``SPARK_GRAFT_MASTER``
+overrides it; see session.get_spark). A packaged job keeps Spark's own
+Python worker daemon, so on Python 3.11 each Python task still pays
+~0.27 s of CPU re-reading Spark's archives, plus a few ms for the
+``--py-files`` zip (session.py).
+
 Mirrors the reference CLI/TOML config surface (__main__.py:23-88,
 config.toml:1-16): keywords, date window, politeness budget
 (= max_concurrency), plus the Spark-native knobs (bloom size, salt

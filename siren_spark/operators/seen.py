@@ -237,11 +237,18 @@ def probe_bloom_broadcast(
     df: DataFrame,
     bloom: BloomFilter,
     key: str = "url_canon",
+    *,
+    broadcasts: list | None = None,
 ) -> DataFrame:
     """Broadcast Bloom probe: adds boolean ``__maybe`` (False = key
     definitely not in the filter). The whole filter broadcasts once and
-    each batch is one vectorized bit test over JVM-computed hashes."""
+    each batch is one vectorized bit test over JVM-computed hashes.
+    The broadcast is appended to ``broadcasts`` for the caller to
+    unpersist once the probed frame is written; without a list it lives
+    as long as the session."""
     bc = df.sparkSession.sparkContext.broadcast(bloom)
+    if broadcasts is not None:
+        broadcasts.append(bc)
 
     @F.pandas_udf("boolean")
     def maybe_udf(h1: pd.Series, h2: pd.Series) -> pd.Series:

@@ -219,6 +219,41 @@ def test_robots_broadcast_released_when_run_fails(spark, site, tmp_path,
     assert any(b is matcher_bcs[0] for b in released)
 
 
+def test_bloom_broadcasts_released_every_round(spark, site, tmp_path,
+                                               monkeypatch):
+    """Each round's annotate broadcasts that round's Bloom filter; once
+    the annotate table is staged nothing reads it, so every filter
+    broadcast of a multi-round default-config crawl must be released —
+    otherwise each round leaves one (up to 64 MiB) in the session."""
+    from pyspark.broadcast import Broadcast
+
+    from siren_spark.operators.seen import BloomFilter
+
+    bloom_bcs, released = [], []
+    real_broadcast = spark.sparkContext.broadcast
+    real_unpersist = Broadcast.unpersist
+
+    def broadcast(v):
+        bc = real_broadcast(v)
+        if isinstance(v, BloomFilter):
+            bloom_bcs.append(bc)
+        return bc
+
+    def unpersist(self, *a, **k):
+        released.append(self)
+        return real_unpersist(self, *a, **k)
+
+    monkeypatch.setattr(spark.sparkContext, "broadcast", broadcast)
+    monkeypatch.setattr(Broadcast, "unpersist", unpersist)
+    cfg = CrawlConfig(budget_per_host=BUDGET, window_start=WINDOW_START,
+                      window_end=WINDOW_END, keywords=SPEC.keywords)
+    res = run_crawl(spark, pages_df(spark, site.pages),
+                    seeds_df(spark, site.seeds), cfg, str(tmp_path / "ckb"))
+    assert res.rounds >= 3
+    assert len(bloom_bcs) >= 2
+    assert all(any(r is b for r in released) for b in bloom_bcs)
+
+
 def test_crawl_config_rejects_unknown_fetch_join():
     """A misspelt fetch_join must fail at construction, not silently
     run another join; 'broadcast' is no longer a strategy."""

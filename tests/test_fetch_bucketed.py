@@ -198,12 +198,15 @@ spark.stop()
 
 
 def test_python_stages_run_one_task_per_core(tmp_path):
-    """Every Python task pays a fixed worker set-up, so a crawl round's
-    Python stages run as at most one task per core even when the
-    16-bucket pages store offers 16 partitions: the staged extraction
-    (one file per extract task) has <= defaultParallelism part files,
-    and the Bloom build runs min(buckets, defaultParallelism) tasks
-    that still emit exactly one partial per bucket."""
+    """Every Python task pays a fixed scheduling and set-up cost: wall
+    time per extra task in every deploy, plus ~0.25 s of worker CPU
+    where Spark's archives stay on the worker path (clusters,
+    ``--py-files`` deploys). So a crawl round's Python stages run as at
+    most one task per core even when the 16-bucket pages store offers
+    16 partitions: the staged extraction (one file per extract task)
+    has <= defaultParallelism part files, and the Bloom build runs
+    min(buckets, defaultParallelism) tasks that still emit exactly one
+    partial per bucket."""
     import json
     import os
     import subprocess
