@@ -42,7 +42,7 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field as dc_field
 from datetime import datetime
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from siren_spark.functions.udfs import (
@@ -413,19 +413,12 @@ class CrawlResult:
     round_urls: list[int] | None = None        # scheduled+extracted per round
 
 
-def _frontier_after(spark: SparkSession, store: CheckpointStore,
-                    gen: int) -> DataFrame:
-    """Round ``gen + 1``'s frontier from round ``gen``'s committed
-    tables: discovered links (extracted, kind='link', with the loop's
-    deterministic priority/depth for that generation) + deferred rows
-    (frontier_ann). Checkpoints written before the dedicated frontier
-    table was dropped still carry one — prefer it (cheaper and exact
-    for however that round was built)."""
-    m = store.manifest(gen)
-    if "frontier" in m["tables"]:
-        return spark.read.parquet(m["tables"]["frontier"])
-    ex = spark.read.parquet(m["tables"]["extracted"])
-    ann = spark.read.parquet(m["tables"]["frontier_ann"])
+def _next_frontier(ex: DataFrame, ann: DataFrame, gen: int) -> DataFrame:
+    """Round ``gen + 1``'s frontier from round ``gen``'s extracted and
+    annotated tables: the discovered links, with the deterministic
+    priority/depth of that generation, plus the deferred rows. The loop
+    builds it from the staged tables and resume from the committed
+    ones, so there is no dedicated frontier table to write."""
     links = (ex.filter(F.col("kind") == "link")
              .select("url", "url_canon", "meta", "via", "domain")
              .withColumn("priority", F.lit(round(1.0 / (gen + 2), 6)))
@@ -435,168 +428,93 @@ def _frontier_after(spark: SparkSession, store: CheckpointStore,
         ann.filter(F.col("status") == "deferred").select(*FRONTIER_COLS))
 
 
-def _seen_df(spark: SparkSession, sources: list[dict]) -> DataFrame | None:
-    """The exact seen set (attempted = seen, ht.py:242-247) from an
-    incremental source list: 'ann' entries are per-round annotated
-    frontiers (filtered to scheduled), 'compact' entries are url_canon-
-    only compaction tables. The list is bounded by seen_compact_every,
-    so reconstructing the seen set reads O(1) tables per round instead
-    of re-scanning every committed round's parquet (O(rounds^2) over a
+def _incremental_df(spark: SparkSession, sources: list[dict],
+                    round_kind: str, round_filter: Column, cols: list[str],
+                    ) -> DataFrame | None:
+    """A cross-round set from an incremental source list: ``compact``
+    entries are ``cols``-only compaction tables, ``round_kind`` entries
+    are per-round tables filtered by ``round_filter``. The list is
+    bounded by seen_compact_every, so each round reads O(1) tables
+    instead of re-scanning every committed round (O(rounds^2) over a
     run — fatal at thousands of rounds)."""
-    ann = [s["path"] for s in sources if s["kind"] == "ann"]
     comp = [s["path"] for s in sources if s["kind"] == "compact"]
+    rnd = [s["path"] for s in sources if s["kind"] == round_kind]
     parts = []
     if comp:
-        parts.append(spark.read.parquet(*comp).select("url_canon"))
-    if ann:
-        parts.append(spark.read.parquet(*ann)
-                     .filter(F.col("status") == "scheduled")
-                     .select("url_canon"))
+        parts.append(spark.read.parquet(*comp).select(*cols))
+    if rnd:
+        parts.append(spark.read.parquet(*rnd).filter(round_filter)
+                     .select(*cols))
     if not parts:
         return None
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    return df
+    return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
 
-def _seen_sources_at(store: CheckpointStore, gen: int) -> list[dict]:
-    """Seen sources recorded in round ``gen``'s manifest (with a
-    fallback for checkpoints written before the incremental format:
-    every committed round's frontier_ann)."""
-    stats = store.manifest(gen)["stats"]
-    if "seen_sources" in stats:
-        return stats["seen_sources"]
-    return [{"path": store.manifest(g)["tables"]["frontier_ann"],
-             "kind": "ann"} for g in range(gen + 1)]
+def _seen_df(spark: SparkSession, sources: list[dict]) -> DataFrame | None:
+    """The exact seen set (attempted = seen, ht.py:242-247): 'ann'
+    sources are annotated frontiers, read for their scheduled rows."""
+    return _incremental_df(spark, sources, "ann",
+                           F.col("status") == "scheduled", ["url_canon"])
 
 
 def _hl_seen_df(spark: SparkSession, sources: list[dict]) -> DataFrame | None:
-    """The cross-round headline done-set (source, title) from an
-    incremental source list: 'res' entries are per-round results tables
-    (filtered to the headline-dedup sources), 'compact' entries are
-    (source, title)-only compaction tables — the same O(1)-tables-per-
-    round scheme as the URL seen set."""
-    res = [s["path"] for s in sources if s["kind"] == "res"]
-    comp = [s["path"] for s in sources if s["kind"] == "compact"]
-    parts = []
-    if comp:
-        parts.append(spark.read.parquet(*comp).select("source", "title"))
-    if res:
-        parts.append(spark.read.parquet(*res)
-                     .filter(F.col("source").isin(*HEADLINE_DEDUP_SOURCES))
-                     .select("source", "title"))
-    if not parts:
-        return None
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    return df
+    """The cross-round headline done-set (source, title): 'res' sources
+    are results tables, read for the headline-dedup sources' rows."""
+    return _incremental_df(spark, sources, "res",
+                           F.col("source").isin(*HEADLINE_DEDUP_SOURCES),
+                           ["source", "title"])
 
 
-def _hl_sources_at(store: CheckpointStore, gen: int) -> list[dict]:
-    """Headline done-set sources in round ``gen``'s manifest (fallback
-    for checkpoints committed before this field existed: every
-    committed round's results table)."""
+def _sources_at(store: CheckpointStore, gen: int, key: str) -> list[dict]:
+    """The incremental source list ``key`` (``seen_sources`` or
+    ``hl_seen_sources``) recorded in round ``gen``'s manifest."""
     stats = store.manifest(gen)["stats"]
-    if "hl_seen_sources" in stats:
-        return stats["hl_seen_sources"]
-    out = []
-    for g in range(gen + 1):
-        tables = store.manifest(g)["tables"]
-        if "results" in tables:
-            out.append({"path": tables["results"], "kind": "res"})
-    return out
+    if key not in stats:
+        raise ValueError(
+            f"checkpoint {store._manifest_path(gen)} has no {key!r}: it was "
+            f"written in an older format; start a fresh checkpoint dir")
+    return stats[key]
 
 
 # status -> user-facing counter metric (oracle.py semantics)
 _METRIC_OF_STATUS = {"blocked": "robots_blocked", "deduped": "deduped",
                      "scheduled": "fetched", "deferred": "deferred"}
+# extraction row kind -> counter metric ('pages' only feeds 'missing')
+_METRIC_OF_KIND = {"page": "pages", "error": "errors", "record": "records"}
 
 
-def _counters_with_fallback(spark: SparkSession,
-                            store: CheckpointStore) -> DataFrame | None:
-    """All rounds' counters, synthesizing rows from manifest stats for
-    generations committed before the staged counters table existed
-    (mirroring _seen_sources_at's backward-compat fallback — resuming an
-    old checkpoint must not silently drop those rounds' counters).
-    Legacy rows carry domain=NULL: the old format kept whole-round
-    rollups only."""
-    last = store.latest_gen()
-    if last is None:
-        return None
-    paths: list[str] = []
-    legacy_rows: list[tuple] = []
-    for g in range(last + 1):
-        m = store.manifest(g)
-        if "counters" in m["tables"]:
-            paths.append(m["tables"]["counters"])
-        else:
-            for status, n in (m["stats"].get("by_status") or {}).items():
-                legacy_rows.append(
-                    (g, None, _METRIC_OF_STATUS.get(status, status), int(n)))
-    parts = []
-    if paths:
-        parts.append(spark.read.parquet(*paths))
-    if legacy_rows:
-        parts.append(spark.createDataFrame(
-            legacy_rows, "gen int, domain string, metric string, n long"))
-    if not parts:
-        return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _round_counters(ann_r: DataFrame, ex: DataFrame, gen: int,
-                    cache_registry: list | None = None) -> DataFrame:
+def _round_counters(ann_r: DataFrame, ex: DataFrame, gen: int) -> DataFrame:
     """Per-domain counters for one round as a (tiny, pre-aggregated)
     DataFrame — never collected to the driver. A web frontier has
     millions of registrable domains; this table is one row per
     (domain, metric) and lives in the round's checkpoint, while the
     manifest JSON keeps only whole-round rollups.
 
-    Domains for extracted page/error/record rows were computed inside
-    the extraction kernel (the URL is in Python there anyway), so this
-    is two pure column-pruned aggregations — no join of the extraction
-    output back to the annotated frontier (that equi-join re-shuffled
-    ~1M rows per round into the derived-writes window, a fixed
-    per-round term the N->4N comparison pays at every cluster size).
-    The two tiny aggregated frames are persisted so the three-way
-    union does not recompute their scans.
+    One column-pruned pass: the annotated frontier's status rows and the
+    extraction's page/error/record rows (their domains were computed
+    inside the extraction kernel) union into (domain, metric) rows, and
+    ONE groupBy(domain) counts every metric, so the plan has a single
+    shuffle and no join. missing = fetched - pages: scheduled but absent
+    from the pages store (the reference's non-200 -> [] path,
+    mirror.py:53). 'records' rides along so the crawl loop reads its
+    per-round record count from this write. Zero counts are dropped.
     """
-    metric_map = F.create_map(
-        *[F.lit(x) for kv in _METRIC_OF_STATUS.items() for x in kv])
-    ann_cnt = (ann_r.groupBy("domain", "status")
-               .agg(F.count(F.lit(1)).alias("n"))
-               .select("domain", metric_map[F.col("status")].alias("metric"),
-                       "n")).persist()
-    exd = (ex.filter(F.col("kind").isin("page", "error", "record"))
-           .select("domain", "kind")
-           .groupBy("domain", "kind").agg(F.count(F.lit(1)).alias("n"))
-           ).persist()
-    if cache_registry is not None:
-        cache_registry.extend([ann_cnt, exd])
-    errors = (exd.filter(F.col("kind") == "error")
-              .select("domain", F.lit("errors").alias("metric"), "n"))
-    # 'records' rides along so the crawl loop reads its per-round record
-    # count from this tiny table instead of re-scanning the extraction
-    records = (exd.filter(F.col("kind") == "record")
-               .select("domain", F.lit("records").alias("metric"), "n"))
-    # missing = scheduled but absent from the pages store (the
-    # reference's non-200 -> [] path, mirror.py:53)
-    sched = (ann_cnt.filter(F.col("metric") == "fetched")
-             .select("domain", F.col("n").alias("n_sched")))
-    hits = (exd.filter(F.col("kind") == "page")
-            .select("domain", F.col("n").alias("n_hit")))
-    missing = (sched.join(hits, "domain", "left")
-               .select("domain", F.lit("missing").alias("metric"),
-                       (F.col("n_sched") - F.coalesce(F.col("n_hit"),
-                                                      F.lit(0))).alias("n"))
-               .filter(F.col("n") > 0))
-    return (ann_cnt.unionByName(errors).unionByName(records)
-            .unionByName(missing)
+    def metric(mapping: dict, col: str) -> Column:
+        return F.create_map(
+            *[F.lit(x) for kv in mapping.items() for x in kv])[F.col(col)]
+
+    rows = ann_r.select("domain", metric(_METRIC_OF_STATUS, "status")
+                        .alias("metric")).unionByName(
+        ex.filter(F.col("kind").isin(*_METRIC_OF_KIND))
+        .select("domain", metric(_METRIC_OF_KIND, "kind").alias("metric")))
+    names = [*_METRIC_OF_STATUS.values(), "errors", "records"]
+    per_domain = rows.groupBy("domain").agg(
+        *[F.count_if(F.col("metric") == m).alias(m)
+          for m in [*names, "pages"]])
+    return (per_domain
+            .withColumn("missing", F.col("fetched") - F.col("pages"))
+            .unpivot("domain", [*names, "missing"], "metric", "n")
+            .filter(F.col("n") > 0)
             .select(F.lit(gen).alias("gen"), "domain", "metric",
                     F.col("n").cast("long").alias("n")))
 
@@ -635,10 +553,12 @@ def run_crawl(
     hl_sources: list[dict] = []
     if resume and (last := store.latest_gen()) is not None:
         start_gen = last + 1
-        frontier = _frontier_after(spark, store, last)
-        seen_sources = _seen_sources_at(store, last)
+        seen_sources = _sources_at(store, last, "seen_sources")
+        hl_sources = _sources_at(store, last, "hl_seen_sources")
+        frontier = _next_frontier(store.read(spark, last, "extracted"),
+                                  store.read(spark, last, "frontier_ann"),
+                                  last)
         seen_exact = _seen_df(spark, seen_sources)
-        hl_sources = _hl_sources_at(store, last)
         if cfg.use_bloom and seen_exact is not None:
             if bucketed:
                 bloom_path = store.manifest(last)["stats"].get("bloom_table")
@@ -831,24 +751,18 @@ def run_crawl(
                 results_round = results_round.withColumn(
                     "lang", langid_udf()(F.col("text")))
 
-            # url_canon/domain were computed inside the extraction kernel
-            # (the link strings were already in Python there) — this write is
-            # a pure column-pruned select, no UDF job over the staged output
-            links = (
-                ex.filter(F.col("kind") == "link")
-                .select("url", "url_canon", "meta", "via", "domain")
-                .withColumn("priority", F.lit(round(1.0 / (gen + 2), 6)))
-                .withColumn("depth", F.lit(gen + 1))
-                .select(*FRONTIER_COLS)
-            )
-            next_frontier = links.unionByName(
-                ann_r.filter(F.col("status") == "deferred").select(*FRONTIER_COLS))
+            # url_canon/domain of the link rows were computed inside the
+            # extraction kernel (the link strings were already in Python
+            # there) — a pure column-pruned select, no UDF job over the
+            # staged output. The prestaged next-round annotate consumes
+            # this frame, and so does next round's inline annotate if the
+            # prestage fails
+            next_frontier = _next_frontier(ex, ann_r, gen)
 
-            cnt_caches: list = []
             # the round's record count rides the counters write as an
             # Observation — no post-commit re-read of the counters table
             cnt_obs = Observation(f"cnt_{gen}")
-            counters_df = _round_counters(ann_r, ex, gen, cnt_caches).observe(
+            counters_df = _round_counters(ann_r, ex, gen).observe(
                 cnt_obs,
                 F.sum(F.when(F.col("metric") == "records", F.col("n"))
                       .otherwise(F.lit(0))).alias("n_rec"))
@@ -882,12 +796,10 @@ def run_crawl(
                         # commit below references exactly this path before
                         # the prestaged annotate is ever consumed
                         bb_next = spark.read.parquet(bloom_tbl_fut.result())
-                    nf = links.unionByName(
-                        ann_r.filter(F.col("status") == "deferred")
-                        .select(*FRONTIER_COLS))
                     seen_next = _seen_df(spark, seen_sources_next)
                     path, counts = _stage_annotated(
-                        gen + 1, nf, merged, seen_next, frontier_rows,
+                        gen + 1, next_frontier, merged, seen_next,
+                        frontier_rows,
                         bloom_bitmaps_=bb_next)
                     return {"gen": gen + 1, "path": path, "counts": counts}
                 except Exception as e:       # noqa: BLE001
@@ -895,12 +807,11 @@ def run_crawl(
                          f"failed ({e!r}); will annotate inline")
                     return None
 
-            # NO dedicated "frontier" table: its content is exactly
-            # links(extracted) + deferred(frontier_ann) — both already
-            # committed this round — so writing it again was a fully
-            # redundant ~frontier-sized parquet job in every round's
-            # derived-writes window (resume reconstructs the same frame
-            # from the committed tables, _frontier_after)
+            # NO dedicated "frontier" table: _next_frontier rebuilds it
+            # from links(extracted) + deferred(frontier_ann), both staged
+            # this round, so writing it again would be a redundant
+            # ~frontier-sized parquet job in every round's derived-writes
+            # window (resume calls it on the committed tables)
             futs = {name: pool.submit(store.stage_table, gen, name, df)
                     for name, df in (("results", results_round),
                                      ("counters", counters_df))}
@@ -943,26 +854,25 @@ def run_crawl(
             # uncommitted gen dir the run would leave behind
             if gen + 1 < cfg.max_rounds and (frontier_rows or 0) > 0:
                 next_fut = pool.submit(_prestage_next)
-            staged_paths = {name: f.result() for name, f in futs.items()}
-            _log(f"gen {gen}   write frontier|results|counters "
+            # the manifest commits exactly the paths stage_table returned
+            staged = {"frontier_ann": ann_path, "extracted": extracted_path}
+            staged.update((name, f.result()) for name, f in futs.items())
+            _log(f"gen {gen}   write results|counters "
                  f"{time.time()-tw:.1f}s")
-            for c in cnt_caches:
-                c.unpersist()
 
             # seen bookkeeping: this round's scheduled rows extend the seen
             # set; compacted every seen_compact_every rounds so reads stay
             # O(1)-table (amortized O(1) per round, staged concurrently
             # above)
-            staged_tables = ["frontier_ann", "extracted", "results",
-                             "counters"]
             if compact_fut is not None:
-                compact_path = compact_fut.result()
-                seen_sources = [{"path": compact_path, "kind": "compact"}]
-                staged_tables.append("seen_compact")
+                staged["seen_compact"] = compact_fut.result()
+                seen_sources = [{"path": staged["seen_compact"],
+                                 "kind": "compact"}]
             hl_sources = hl_sources_next
             if hl_fut is not None:
-                hl_sources = [{"path": hl_fut.result(), "kind": "compact"}]
-                staged_tables.append("hl_compact")
+                staged["hl_compact"] = hl_fut.result()
+                hl_sources = [{"path": staged["hl_compact"],
+                               "kind": "compact"}]
 
             stats: dict = {
                 "by_status": {k: int(v) for k, v in n_by_status.items()},
@@ -976,19 +886,14 @@ def run_crawl(
                 # — fully distributed, the driver never materializes a
                 # bitmap; the commit references the staged path and the
                 # checkpoint carries it
-                bloom_path = bloom_tbl_fut.result()
-                staged_tables.append("bloom")
-                stats["bloom_table"] = bloom_path
-                bloom_bitmaps = spark.read.parquet(bloom_path)
+                staged["bloom"] = stats["bloom_table"] = bloom_tbl_fut.result()
+                bloom_bitmaps = spark.read.parquet(staged["bloom"])
 
-            store.write_round(
-                gen, {}, stats=stats,
-                staged={n: f"{store._gen_dir(gen)}/{n}" for n in staged_tables})
+            store.write_round(gen, {}, stats=stats, staged=staged)
             # roll forward from committed state: next_frontier reads
             # only this round's committed staged parquet (extracted +
-            # frontier_ann), so it IS durable state — no re-listing of
-            # anything, no dedicated frontier table (see _frontier_after
-            # for the identical resume-time reconstruction)
+            # frontier_ann), so it IS durable state — the same
+            # _next_frontier call rebuilds it on resume
             frontier = next_frontier
             seen_exact = _seen_df(spark, seen_sources)
             if bloom_fut is not None:
@@ -1043,8 +948,8 @@ def run_crawl(
     return CrawlResult(
         rounds=(last + 1 if last is not None else 0),
         results=store.read_all(spark, "results"),
-        counters=_counters_with_fallback(spark, store),
-        seen=(_seen_df(spark, _seen_sources_at(store, last))
+        counters=store.read_all(spark, "counters"),
+        seen=(_seen_df(spark, _sources_at(store, last, "seen_sources"))
               if last is not None else None),
         round_secs=round_secs,
         round_urls=round_urls,

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 class CheckpointStore:
     def __init__(self, root: str):
         self.root = root
+        # gens whose stale uncommitted dir this store already cleaned
+        self._staged_gens: set[int] = set()
         os.makedirs(os.path.join(root, "_manifests"), exist_ok=True)
 
     # -- paths ---------------------------------------------------------
@@ -38,8 +40,6 @@ class CheckpointStore:
     # -- commit protocol -------------------------------------------------
     def _clean_stale(self, gen: int) -> None:
         """Drop an uncommitted gen dir left by a killed run (once per gen)."""
-        if not hasattr(self, "_staged_gens"):
-            self._staged_gens: set[int] = set()
         if gen in self._staged_gens:
             return
         gd = self._gen_dir(gen)
@@ -56,8 +56,7 @@ class CheckpointStore:
         gd = self._gen_dir(gen)
         if os.path.exists(gd) and not os.path.exists(self._manifest_path(gen)):
             shutil.rmtree(gd)
-        if hasattr(self, "_staged_gens"):
-            self._staged_gens.discard(gen)
+        self._staged_gens.discard(gen)
 
     def stage_table(self, gen: int, name: str, df: DataFrame) -> str:
         """Materialize an intermediate table under the (uncommitted) gen

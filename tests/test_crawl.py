@@ -449,34 +449,94 @@ def test_a3_window_scoped_to_dedup_sources(spark):
     assert any("ht" in ln and "Filter" in ln for ln in sub), plan
 
 
-def test_counters_fallback_for_legacy_checkpoints(spark, tmp_path):
-    """Rounds committed before the staged counters table existed get
-    their counters synthesized from manifest by_status stats (the same
-    backward-compat contract seen_sources already has)."""
-    import json
+def test_round_counters_single_aggregation(spark, tmp_path):
+    """A round's counters are one pass over its committed tables: one
+    groupBy(domain) (one shuffle, no join) whose rows equal a
+    pure-Python count over the same frontier_ann/extracted parquet."""
+    import re
+    from collections import Counter
 
-    from siren_spark.crawl import _counters_with_fallback
+    import pyarrow.parquet as pq
+
+    from siren_spark.crawl import _METRIC_OF_STATUS, _round_counters
     from siren_spark.operators.checkpoint import CheckpointStore
 
     site = build_site(SPEC)
     cfg = CrawlConfig(budget_per_host=BUDGET, window_start=WINDOW_START,
                       window_end=WINDOW_END, keywords=SPEC.keywords,
-                      use_bloom=False, max_rounds=2)
-    ckpt = str(tmp_path / "ck_legacy")
+                      use_bloom=False, max_rounds=1)
+    ckpt = str(tmp_path / "ck_counters")
     run_crawl(spark, pages_df(spark, site.pages),
               seeds_df(spark, site.seeds), cfg, ckpt)
-    store = CheckpointStore(ckpt)
-    # doctor round 0 into the legacy format: no counters table
-    mp = store._manifest_path(0)
-    m = json.load(open(mp))
-    del m["tables"]["counters"]
-    json.dump(m, open(mp, "w"))
-    out = _counters_with_fallback(spark, store)
-    rows = out.collect()
-    g0 = {r.metric: r.n for r in rows if r.gen == 0}
-    assert g0.get("fetched") == m["stats"]["by_status"]["scheduled"]
-    assert all(r.domain is None for r in rows if r.gen == 0)
-    assert any(r.gen == 1 and r.domain is not None for r in rows)
+    tables = CheckpointStore(ckpt).manifest(0)["tables"]
+    out = _round_counters(spark.read.parquet(tables["frontier_ann"]),
+                          spark.read.parquet(tables["extracted"]), 0)
+
+    qe = out._jdf.queryExecution()
+    nodes = [ln.lstrip(" :+-") for ln in
+             qe.optimizedPlan().toString().splitlines()]
+    assert sum(n.startswith("Aggregate ") for n in nodes) == 1, nodes
+    assert not any(n.startswith("Join ") for n in nodes), nodes
+    got = {(r.gen, r.domain, r.metric, r.n) for r in out.collect()}
+    # executed (AQE final) plan: count only exchanges that actually ran
+    shuffles = re.findall(r"ShuffleQueryStage \d+[^\n]*\n\s*\+- Exchange ",
+                          qe.executedPlan().toString())
+    assert len(shuffles) == 1, qe.executedPlan().toString()
+
+    exp: Counter = Counter()
+    for r in pq.read_table(tables["frontier_ann"],
+                           columns=["domain", "status"]).to_pylist():
+        exp[(r["domain"], _METRIC_OF_STATUS[r["status"]])] += 1
+    pages: Counter = Counter()
+    for r in pq.read_table(tables["extracted"],
+                           columns=["domain", "kind"]).to_pylist():
+        if r["kind"] == "page":
+            pages[r["domain"]] += 1
+        elif r["kind"] in ("error", "record"):
+            exp[(r["domain"], r["kind"] + "s")] += 1
+    for (d, m), n in list(exp.items()):
+        if m == "fetched" and n > pages[d]:
+            exp[(d, "missing")] = n - pages[d]
+    assert got == {(0, d, m, n) for (d, m), n in exp.items()}
+    assert {"fetched", "records"} <= {m for _, _, m, _ in got}
+
+
+def test_resume_refuses_checkpoint_without_source_lists(spark, tmp_path,
+                                                         monkeypatch):
+    """A manifest without its incremental source lists (an older
+    checkpoint format) is refused on resume with an error naming the
+    key, before any table is staged — never silently re-read from
+    every earlier round."""
+    import dataclasses
+    import json
+
+    from siren_spark.operators.checkpoint import CheckpointStore
+
+    site = build_site(SPEC)
+    cfg = CrawlConfig(budget_per_host=BUDGET, window_start=WINDOW_START,
+                      window_end=WINDOW_END, keywords=SPEC.keywords,
+                      use_bloom=False, max_rounds=1)
+    ckpt = str(tmp_path / "ck_old")
+    run_crawl(spark, pages_df(spark, site.pages),
+              seeds_df(spark, site.seeds), cfg, ckpt)
+    mp = CheckpointStore(ckpt)._manifest_path(0)
+    with open(mp) as f:
+        committed = json.load(f)
+
+    def no_staging(*a, **k):
+        raise AssertionError("a table was staged")
+
+    monkeypatch.setattr(CheckpointStore, "stage_table", no_staging)
+    for key in ("seen_sources", "hl_seen_sources"):
+        m = json.loads(json.dumps(committed))
+        del m["stats"][key]
+        with open(mp, "w") as f:
+            json.dump(m, f)
+        with pytest.raises(ValueError, match=f"'{key}'"):
+            run_crawl(spark, pages_df(spark, site.pages),
+                      seeds_df(spark, site.seeds),
+                      dataclasses.replace(cfg, max_rounds=3), ckpt,
+                      resume=True)
 
 
 def test_robots_auto_switches_to_cogroup(spark, site, tmp_path, monkeypatch):
@@ -705,14 +765,11 @@ def test_seen_split_confirm_equals_broadcast_confirm(spark, monkeypatch):
     assert by == {"deduped": 167, "scheduled": 140, "deferred": 193}
 
 
-def test_frontier_reconstruction_and_legacy_preference(spark, tmp_path):
-    """The per-round frontier table was dropped (round 6): resume
-    reconstructs the next frontier from the committed extracted +
-    frontier_ann tables. A checkpoint written BEFORE the drop (manifest
-    listing a frontier table) must still be preferred verbatim."""
-    import json
-
-    from siren_spark.crawl import _frontier_after
+def test_frontier_reconstruction(spark, tmp_path):
+    """There is no per-round frontier table: _next_frontier rebuilds
+    the next frontier from the committed extracted + frontier_ann
+    tables, as resume does."""
+    from siren_spark.crawl import _next_frontier
     from siren_spark.operators.checkpoint import CheckpointStore
 
     site = build_site(SPEC)
@@ -724,14 +781,14 @@ def test_frontier_reconstruction_and_legacy_preference(spark, tmp_path):
               seeds_df(spark, site.seeds), cfg, ckpt)
     store = CheckpointStore(ckpt)
     m0 = store.manifest(0)
-    assert "frontier" not in m0["tables"]        # new format
-    rebuilt = _frontier_after(spark, store, 0)
+    assert "frontier" not in m0["tables"]
+    ex = store.read(spark, 0, "extracted")
+    ann = store.read(spark, 0, "frontier_ann")
+    rebuilt = _next_frontier(ex, ann, 0)
     # reconstruction must equal the round-1 annotate's input: every
     # link of round 0 plus its deferred rows, with the loop's
     # deterministic priority/depth
-    ex = spark.read.parquet(m0["tables"]["extracted"])
     n_links = ex.filter("kind = 'link'").count()
-    ann = spark.read.parquet(m0["tables"]["frontier_ann"])
     n_def = ann.filter("status = 'deferred'").count()
     assert rebuilt.count() == n_links + n_def > 0
     # link rows (depth = gen+1 = 1) carry the loop's deterministic
@@ -739,13 +796,3 @@ def test_frontier_reconstruction_and_legacy_preference(spark, tmp_path):
     link_prios = set(rebuilt.filter("depth = 1").select("priority")
                      .distinct().toPandas()["priority"])
     assert link_prios == {round(1.0 / 2, 6)} or n_links == 0
-    # legacy preference: doctor a frontier table into the manifest and
-    # verify _frontier_after reads THAT instead of reconstructing
-    legacy = rebuilt.limit(1)
-    legacy_path = str(tmp_path / "legacy_frontier")
-    legacy.write.parquet(legacy_path)
-    mp = store._manifest_path(0)
-    m = json.load(open(mp))
-    m["tables"]["frontier"] = legacy_path
-    json.dump(m, open(mp, "w"))
-    assert _frontier_after(spark, store, 0).count() == 1
