@@ -1,13 +1,12 @@
 """Gap-based sessionization of event streams.
 
-The batch analog of the per-epoch stateful politeness throttle
-(streaming/politeness_state.py): group a user's events into sessions
-split wherever the inter-event gap exceeds a threshold — the standard
-visit-analysis primitive over crawl/access logs (how often does a
-client return, how long does a visit run), and the same
-assign-by-ordered-scan shape the reference's per-host visit pacing
-implies (core/http.py's per-host serialization orders each host's
-requests in time; sessionization is that order made queryable).
+Group a user's events into sessions split wherever the inter-event gap
+exceeds a threshold — the standard visit-analysis primitive over
+crawl/access logs (how often does a client return, how long does a
+visit run), and the same assign-by-ordered-scan shape the reference's
+per-host visit pacing implies (core/http.py's per-host serialization
+orders each host's requests in time; sessionization is that order made
+queryable).
 
 Algorithm (one shuffle): partition by the key, order by (ts,
 tie-break id); an event opens a new session iff it has no predecessor
@@ -21,10 +20,9 @@ single key's event count after the shuffle — the same bound any
 correct sessionizer needs (a session is inherently a per-key ordered
 scan). Keys are users/hosts (10^7-10^9, high cardinality, mild skew);
 for a pathological hot key, pre-split by day before sessionizing, as
-gap sessions cannot span a quiet day boundary. The streaming
-counterpart with the identical semantic is
-``applyInPandasWithState`` keyed the same way (see
-streaming/politeness_state.py for the pattern).
+gap sessions cannot span a quiet day boundary. A streaming
+counterpart with the identical semantic would be
+``applyInPandasWithState`` keyed the same way.
 
 Determinism: the event order (ts asc, id asc) is total, so session
 assignment — and therefore every aggregate — is independent of
@@ -95,8 +93,7 @@ def tumbling_rollup(
     """Tumbling-window rollup: one row per (window_start[, key]) with
     n_events and optional integer-cent value sum — the batch face of
     the Structured Streaming windowed aggregation (same ``F.window``
-    construct a ``readStream`` pipeline uses with a watermark; see
-    streaming/drain.py for the streaming side of this engine).
+    construct a ``readStream`` pipeline uses with a watermark).
 
     One combiner-friendly groupBy: partial aggregation map-side, the
     shuffle carries one row per (window, key) per task — safe at any
