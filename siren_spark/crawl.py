@@ -4,11 +4,12 @@ One round = one micro-batch (SURVEY.md §3.1 Spark lifecycle equivalent),
 structured so each round materializes exactly two heavy jobs:
 
 1. **annotate**: ONE plan over the frontier computes every scheduling
-   decision as columns — robots verdict (vectorized matcher), in-frontier
-   dedup rank (window over url_canon), seen-set probe (broadcast Bloom +
-   exact-confirm join on the maybe-seen sliver only), and the per-host
-   politeness top-k (operators/politeness.py) — and writes the annotated
-   frontier with a ``status`` column
+   decision as columns — robots verdict (vectorized matcher), seen-set
+   probe (Bloom filter: maybe-seen or definitely new), in-frontier dedup
+   flag (a window over the (domain, __salt) politeness partitions), the
+   exact confirm of the maybe-seen sliver against the seen set, and the
+   per-host politeness top-k (operators/politeness.py) — and writes the
+   annotated frontier with a ``status`` column
    (blocked | deduped | scheduled | deferred). Counters and the next
    round's inputs all derive from this parquet; nothing is recomputed.
 2. **fetch+extract**: scheduled rows equi-join the pages store
@@ -17,7 +18,11 @@ structured so each round materializes exactly two heavy jobs:
 
 The Bloom seen-filter is maintained incrementally: each round builds a
 filter over its seen-delta only (mapInArrow) and OR-merges it into the
-running filter driver-side, so no round rescans the seen history.
+running filter — driver-side for a broadcast filter, as a distributed
+(bucket, bitmap) checkpoint table above BLOOM_BROADCAST_MAX_BYTES — so no
+round rescans the seen history. The filter only narrows the confirm: a
+run without one (``use_bloom=False``) runs the same plan with every key
+a maybe, and gets the same crawl.
 
 Every round commits atomically (manifest rename); a killed run resumes
 from the last committed round with byte-identical final state.
@@ -102,10 +107,6 @@ class CrawlConfig:
     # verifies domain == registrable_domain(url_canon) on every frontier
     # row, the invariant the fused (domain, __salt) dup window relies on
     debug_invariants: bool = False
-    # enrich results with a detected-language column (trigram-profile
-    # classifier, functions/langid.py) — the production-shaped LLM-data
-    # path; off by default to keep the reference result schema exact
-    lang_detect: bool = False
     window_start: datetime | None = None
     window_end: datetime | None = None
     keywords: list[str] = dc_field(default_factory=list)
@@ -182,8 +183,7 @@ def _annotate_round(
     *,
     cfg: CrawlConfig,
     robots: RobotsGate | None = None,
-    bloom: BloomFilter | None,
-    bloom_bitmaps: DataFrame | None = None,
+    bloom: BloomFilter | DataFrame | None,
     seen_exact: DataFrame | None,
     cache_registry: list | None = None,
     broadcasts: list | None = None,
@@ -192,6 +192,10 @@ def _annotate_round(
     """One plan: robots -> dedup -> seen -> politeness, as a status column.
 
     ``robots`` is the run's gate (None: every URL allowed).
+    ``bloom`` is the run's seen filter: a driver-side
+    :class:`BloomFilter` (broadcast probe), the (bucket, bitmap) table
+    (cogroup probe), or None (every key is a maybe). Whatever the filter,
+    its maybe-seen rows are confirmed exactly against ``seen_exact``.
     ``cache_registry`` and ``broadcasts`` collect the frames this plan
     persists and the Bloom filter broadcast, for the caller to unpersist
     once the plan is written.
@@ -229,33 +233,28 @@ def _annotate_round(
     df = df.withColumn(
         "__salt", F.pmod(F.xxhash64("url_canon"), F.lit(cfg.salt_buckets)))
 
-    bucketed = (seen_exact is not None and cfg.use_bloom
-                and bloom_bitmaps is not None)
-    bloom_bcast = (seen_exact is not None and cfg.use_bloom
-                   and not bucketed and bloom is not None)
-    plain_seen_join = seen_exact is not None and not bucketed \
-        and not bloom_bcast
-
-    # --- bucketed Bloom probe FIRST (it cogroups by bloom bucket, i.e.
-    # repartitions the frontier) so the dup/politeness exchange below is
-    # the LAST partitioning and phase-1 can reuse it -------------------
-    if bucketed:
-        # each task cogroups with exactly its bucket's bitmap — no
-        # executor ever holds the full filter
-        df = probe_bloom_bucketed(
-            df, bloom_bitmaps, "url_canon",
-            bits_per_bucket=cfg.bloom_bits, buckets=cfg.bloom_buckets)
-
-    # --- broadcast-Bloom maybe-probe BEFORE the dup window (not after):
-    # EvalPython nodes do not propagate outputPartitioning, so a probe
-    # UDF sitting between the fused window and its downstream consumers
-    # would hide the (domain, __salt) partitioning and force politeness
-    # phase 1 to re-exchange the whole frontier — the exact shuffle the
-    # fusion exists to remove. Probing first keeps the WindowExec as
-    # the cached plan's tail, whose partitioning the cache reports.
-    if bloom_bcast:
-        df = probe_bloom_broadcast(df, bloom, "url_canon",
-                                   broadcasts=broadcasts)
+    # --- seen probe BEFORE the dup window: ``__maybe`` (False = key
+    # definitely unseen). The cogroup probe repartitions the frontier by
+    # bloom bucket, so the dup/politeness exchange below must stay the
+    # LAST partitioning for phase 1 to reuse it; and EvalPython nodes do
+    # not propagate outputPartitioning, so a broadcast-probe UDF between
+    # the fused window and its consumers would hide the (domain, __salt)
+    # partitioning and force politeness phase 1 to re-exchange the whole
+    # frontier. Probing first keeps the WindowExec as the cached plan's
+    # tail, whose partitioning the cache reports. Round 0 has no seen
+    # set and no probe.
+    if seen_exact is not None:
+        if isinstance(bloom, BloomFilter):
+            df = probe_bloom_broadcast(df, bloom, "url_canon",
+                                       broadcasts=broadcasts)
+        elif bloom is not None:
+            # each task cogroups with exactly its bucket's bitmap — no
+            # executor ever holds the full filter
+            df = probe_bloom_bucketed(
+                df, bloom, "url_canon",
+                bits_per_bucket=cfg.bloom_bits, buckets=cfg.bloom_buckets)
+        else:
+            df = df.withColumn("__maybe", F.lit(True))
 
     # --- in-frontier dedup, FUSED into the politeness partition family:
     # domain and __salt are both functions of url_canon, so a url_canon
@@ -265,14 +264,11 @@ def _annotate_round(
     # lag()-based first-flag over a url_canon-leading sort. One exchange
     # then serves dedup AND politeness phase 1 — the three-window
     # annotate plan was 3 full-frontier shuffles, flat ~5 s/round cost
-    # that the N->4N ratio paid at every cluster size. (Exception: the
-    # no-bloom exact-seen path keeps the url_canon window so the seen
-    # SMJ below reuses ITS exchange instead.)
+    # that the N->4N ratio paid at every cluster size.
     dup_order = [F.desc("__allowed"), F.desc("priority"), F.asc("depth"),
                  F.asc_nulls_first("via"), F.asc("url")]
-    dup_part = ["url_canon"] if plain_seen_join else ["domain", "__salt"]
-    w_dup = Window.partitionBy(*dup_part).orderBy(F.asc("url_canon"),
-                                                  *dup_order)
+    w_dup = Window.partitionBy("domain", "__salt").orderBy(
+        F.asc("url_canon"), *dup_order)
     df = df.withColumn(
         "__first",
         F.coalesce(F.lag("url_canon").over(w_dup) != F.col("url_canon"),
@@ -280,7 +276,9 @@ def _annotate_round(
 
     # --- seen confirm: Bloom negatives skip it entirely; maybe-seen
     # rows exact-confirm against the seen set --------------------------
-    if bucketed or bloom_bcast:
+    if seen_exact is None:
+        df = _cache(df.withColumn("__seen", F.lit(False)))
+    else:
         # df is consumed multiple times below (confirm sliver + eligible
         # count + final status): persist the small flag-annotated frame
         # so the upstream (gate UDF + window + probe) runs once
@@ -326,15 +324,6 @@ def _annotate_round(
                 .drop("__hit"))
             df = _cache(definite.drop("__maybe")
                         .unionByName(candidates.drop("__maybe")))
-    elif plain_seen_join:
-        seen_keys = seen_exact.select("url_canon").withColumn(
-            "__hit", F.lit(True))
-        df = _cache(df.join(seen_keys, "url_canon", "left")
-                    .withColumn("__seen",
-                                F.coalesce(F.col("__hit"), F.lit(False)))
-                    .drop("__hit"))
-    else:
-        df = _cache(df.withColumn("__seen", F.lit(False)))
 
     df = df.withColumn(
         "__eligible",
@@ -533,11 +522,18 @@ def run_crawl(
     store = CheckpointStore(checkpoint_dir)
     pages_p = prepare_pages(pages)
 
-    bloom: BloomFilter | None = None
-    bloom_bitmaps: DataFrame | None = None   # bucketed-probe bitmap table
+    # the run's seen filter: a driver-side BloomFilter (broadcast
+    # probe), the (bucket, bitmap) table of the bucketed mode, or None
+    # (no filter: every frontier key is exact-confirmed)
+    bloom: BloomFilter | DataFrame | None = None
     seen_exact: DataFrame | None = None
     bucketed = cfg.use_bloom and bloom_bucketed(cfg.bloom_bits,
                                                 cfg.bloom_buckets)
+    # the bucketed table is probed with the run's shape; a checkpoint
+    # records the shape it was built with, and resume reads the table
+    # only when both agree
+    bloom_shape = {"bits_per_bucket": cfg.bloom_bits,
+                   "buckets": cfg.bloom_buckets}
 
     def _build_delta_bloom(delta: DataFrame) -> BloomFilter:
         return build_bloom(delta, "url_canon",
@@ -561,9 +557,11 @@ def run_crawl(
         seen_exact = _seen_df(spark, seen_sources)
         if cfg.use_bloom and seen_exact is not None:
             if bucketed:
-                bloom_path = store.manifest(last)["stats"].get("bloom_table")
-                bloom_bitmaps = (
-                    spark.read.parquet(bloom_path) if bloom_path
+                last_stats = store.manifest(last)["stats"]
+                bloom = (
+                    spark.read.parquet(last_stats["bloom_table"])
+                    if "bloom_table" in last_stats
+                    and last_stats.get("bloom_shape") == bloom_shape
                     else or_reduce_bitmaps(_delta_partials(seen_exact)))
             else:
                 bloom = _build_delta_bloom(seen_exact)
@@ -588,27 +586,32 @@ def run_crawl(
     round_secs: list[float] = []
     round_urls: list[int] = []
 
+    def _bloom_after(prev: BloomFilter | DataFrame | None,
+                     fut) -> BloomFilter | DataFrame | None:
+        """The filter once a round's update ``fut`` (None: no filter)
+        has landed: the round's staged bitmap table in bucketed mode,
+        else its delta filter OR-merged into ``prev`` (numpy,
+        driver-side, ~ms)."""
+        if fut is None:
+            return prev
+        if bucketed:
+            return spark.read.parquet(fut.result())
+        return merge_blooms(prev, fut.result())
+
     def _stage_annotated(gen_: int, frontier_: DataFrame,
-                         bloom_: BloomFilter | None,
+                         bloom_: BloomFilter | DataFrame | None,
                          seen_: DataFrame | None,
                          frontier_rows_: int | None,
-                         bloom_bitmaps_: DataFrame | None = None,
                          ) -> tuple[str, dict]:
         """Annotate one round's frontier and stage it; returns
         (path, by-status counts). Pure function of committed/staged
         inputs, so it can run from a worker thread (round pipelining)
-        or inline — byte-identical either way. ``bloom_bitmaps_``
-        overrides the loop's committed bitmap table (the pipelined
-        next-round annotate passes the round's staged-but-uncommitted
-        table, which commits before that annotate is consumed)."""
+        or inline — byte-identical either way."""
         caches: list = []
         bcasts: list = []
         try:
             ann = _annotate_round(frontier_, cfg=cfg, robots=gate,
                                   bloom=bloom_,
-                                  bloom_bitmaps=(bloom_bitmaps_
-                                                 if bloom_bitmaps_ is not None
-                                                 else bloom_bitmaps),
                                   seen_exact=seen_,
                                   cache_registry=caches,
                                   broadcasts=bcasts,
@@ -679,24 +682,21 @@ def run_crawl(
             # pre-commit — which is what keeps round pipelining effective
             # in the 10^10-scale configuration.
             bloom_fut = None
-            bloom_tbl_fut = None
-            if cfg.use_bloom and not bucketed:
-                delta_r = (ann_r.filter(F.col("status") == "scheduled")
-                           .select("url_canon"))
-                bloom_fut = pool.submit(_build_delta_bloom, delta_r)
-            elif bucketed:
-                prev_bitmaps = bloom_bitmaps
+            prev_bloom = bloom
+            delta_r = (ann_r.filter(F.col("status") == "scheduled")
+                       .select("url_canon"))
+            if bucketed:
 
                 def _stage_bloom_table() -> str:
-                    delta_r = (ann_r.filter(F.col("status") == "scheduled")
-                               .select("url_canon"))
                     partials = _delta_partials(delta_r)
-                    if prev_bitmaps is not None:
-                        partials = prev_bitmaps.unionByName(partials)
+                    if prev_bloom is not None:
+                        partials = prev_bloom.unionByName(partials)
                     return store.stage_table(gen, "bloom",
                                              or_reduce_bitmaps(partials))
 
-                bloom_tbl_fut = pool.submit(_stage_bloom_table)
+                bloom_fut = pool.submit(_stage_bloom_table)
+            elif cfg.use_bloom:
+                bloom_fut = pool.submit(_build_delta_bloom, delta_r)
 
             sched = ann_r.filter(F.col("status") == "scheduled")
 
@@ -746,10 +746,6 @@ def run_crawl(
                 cfg,
                 hl_seen=_hl_seen_df(spark, hl_sources),
             ).select(*RESULT_COLS)
-            if cfg.lang_detect:
-                from siren_spark.functions.langid import langid_udf
-                results_round = results_round.withColumn(
-                    "lang", langid_udf()(F.col("text")))
 
             # url_canon/domain of the link rows were computed inside the
             # extraction kernel (the link strings were already in Python
@@ -787,20 +783,14 @@ def run_crawl(
                 inline annotation next round — pipelining is an overlap,
                 never a correctness dependency."""
                 try:
-                    merged = bloom
-                    bb_next = None
-                    if bloom_fut is not None:
-                        merged = merge_blooms(bloom, bloom_fut.result())
-                    if bloom_tbl_fut is not None:
-                        # this round's staged (pre-commit) bitmap table; the
-                        # commit below references exactly this path before
-                        # the prestaged annotate is ever consumed
-                        bb_next = spark.read.parquet(bloom_tbl_fut.result())
+                    # in bucketed mode: this round's staged (pre-commit)
+                    # bitmap table; the commit below references exactly
+                    # this path before the prestaged annotate is consumed
+                    bloom_next = _bloom_after(prev_bloom, bloom_fut)
                     seen_next = _seen_df(spark, seen_sources_next)
                     path, counts = _stage_annotated(
-                        gen + 1, next_frontier, merged, seen_next,
-                        frontier_rows,
-                        bloom_bitmaps_=bb_next)
+                        gen + 1, next_frontier, bloom_next, seen_next,
+                        frontier_rows)
                     return {"gen": gen + 1, "path": path, "counts": counts}
                 except Exception as e:       # noqa: BLE001
                     _log(f"gen {gen}   prestage next-round annotate "
@@ -886,20 +876,18 @@ def run_crawl(
                 # — fully distributed, the driver never materializes a
                 # bitmap; the commit references the staged path and the
                 # checkpoint carries it
-                staged["bloom"] = stats["bloom_table"] = bloom_tbl_fut.result()
-                bloom_bitmaps = spark.read.parquet(staged["bloom"])
+                staged["bloom"] = stats["bloom_table"] = bloom_fut.result()
+                stats["bloom_shape"] = bloom_shape
 
-            store.write_round(gen, {}, stats=stats, staged=staged)
+            store.write_round(gen, staged, stats=stats)
             # roll forward from committed state: next_frontier reads
             # only this round's committed staged parquet (extracted +
             # frontier_ann), so it IS durable state — the same
             # _next_frontier call rebuilds it on resume
             frontier = next_frontier
             seen_exact = _seen_df(spark, seen_sources)
-            if bloom_fut is not None:
-                # the delta filter was built concurrently with fetch+extract;
-                # only the (numpy, driver-side, ~ms) OR-merge is left
-                bloom = merge_blooms(bloom, bloom_fut.result())
+            # the filter update ran concurrently with fetch+extract
+            bloom = _bloom_after(bloom, bloom_fut)
             if next_fut is not None:
                 # next round's annotate was staged concurrently with this
                 # round's writes + commit (None if it failed -> annotate

@@ -73,7 +73,10 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument("--salt-buckets", type=int, default=64)
     p.add_argument("--bloom-bits", type=int, default=1 << 20)
     p.add_argument("--bloom-buckets", type=int, default=64)
-    p.add_argument("--no-bloom", action="store_true")
+    p.add_argument("--no-bloom", action="store_true",
+                   help="keep no Bloom seen filter: every frontier URL is "
+                        "confirmed exactly against the seen set (the same "
+                        "crawl; the filter only narrows that confirm)")
     p.add_argument("--seen-compact-every", type=int, default=8)
     p.add_argument("--resume", action="store_true")
     p.add_argument("--verbose", action="store_true")

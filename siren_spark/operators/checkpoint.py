@@ -67,18 +67,11 @@ class CheckpointStore:
         df.write.mode("overwrite").parquet(path)
         return path
 
-    def write_round(self, gen: int, tables: dict[str, DataFrame],
-                    stats: dict | None = None,
-                    staged: dict[str, str] | None = None) -> None:
-        """Write all tables for round ``gen``, then commit atomically."""
-        self._clean_stale(gen)
-        gd = self._gen_dir(gen)
-        names = dict(staged or {})
-        for name, df in tables.items():
-            path = os.path.join(gd, name)
-            df.write.mode("overwrite").parquet(path)
-            names[name] = path
-        manifest = {"gen": gen, "tables": names, "stats": stats or {}}
+    def write_round(self, gen: int, staged: dict[str, str],
+                    stats: dict | None = None) -> None:
+        """Commit round ``gen`` atomically: its manifest names the
+        ``staged`` tables (name -> path ``stage_table`` returned)."""
+        manifest = {"gen": gen, "tables": dict(staged), "stats": stats or {}}
         tmp = self._manifest_path(gen) + ".tmp"
         with open(tmp, "w") as f:
             json.dump(manifest, f)
@@ -101,10 +94,9 @@ class CheckpointStore:
     def read(self, spark: SparkSession, gen: int, name: str) -> DataFrame:
         return spark.read.parquet(self.manifest(gen)["tables"][name])
 
-    def read_all(self, spark: SparkSession, name: str,
-                 upto_gen: int | None = None) -> DataFrame | None:
+    def read_all(self, spark: SparkSession, name: str) -> DataFrame | None:
         """Union of table ``name`` across all committed rounds (e.g. results)."""
-        last = self.latest_gen() if upto_gen is None else upto_gen
+        last = self.latest_gen()
         if last is None:
             return None
         paths = []

@@ -63,24 +63,28 @@ class BloomFilter:
     bitmaps: dict[int, np.ndarray]  # bucket -> uint8 bitmap
 
     def might_contain_np(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-        m = self.bits_per_bucket
         bucket_ids = (h1.astype(np.uint64) % np.uint64(self.buckets)).astype(np.int64)
-        out = np.ones(len(h1), dtype=bool)
+        out = np.zeros(len(h1), dtype=bool)
         for b in np.unique(bucket_ids):
             bm = self.bitmaps.get(int(b))
-            sel = bucket_ids == b
-            if bm is None:
-                out[sel] = False
-                continue
-            acc = np.ones(sel.sum(), dtype=bool)
-            hh1 = h1[sel].astype(np.uint64)
-            hh2 = h2[sel].astype(np.uint64)
-            for i in range(self.num_hashes):
-                idx = (hh1 + np.uint64(i) * hh2) % np.uint64(m)
-                acc &= (bm[(idx >> np.uint64(3)).astype(np.int64)]
-                        >> (idx & np.uint64(7)).astype(np.uint8)) & 1 == 1
-            out[sel] = acc
+            if bm is not None:
+                sel = bucket_ids == b
+                out[sel] = _bits_set(bm, h1[sel], h2[sel],
+                                     self.bits_per_bucket, self.num_hashes)
         return out
+
+
+def _bits_set(bm: np.ndarray, h1: np.ndarray, h2: np.ndarray, m: int,
+              k: int) -> np.ndarray:
+    """The k-hash bit test of one bucket's bitmap ``bm``: True where all
+    k double-hashed bits of the key (hash pair h1, h2) are set."""
+    h1, h2 = h1.astype(np.uint64), h2.astype(np.uint64)
+    acc = np.ones(len(h1), dtype=bool)
+    for i in range(k):
+        idx = (h1 + np.uint64(i) * h2) % np.uint64(m)
+        acc &= (bm[(idx >> np.uint64(3)).astype(np.int64)]
+                >> (idx & np.uint64(7)).astype(np.uint8)) & 1 == 1
+    return acc
 
 
 def merge_blooms(a: BloomFilter | None, b: BloomFilter) -> BloomFilter:
@@ -216,15 +220,10 @@ def probe_bloom_bucketed(
         if len(right) == 0:
             left[out_col] = False
             return left
-        bm = np.frombuffer(right["bitmap"].iloc[0], dtype=np.uint8)
-        h1 = left["__h1"].to_numpy(dtype=np.int64).astype(np.uint64)
-        h2 = left["__h2"].to_numpy(dtype=np.int64).astype(np.uint64)
-        acc = np.ones(len(left), dtype=bool)
-        for i in range(k):
-            idx = (h1 + np.uint64(i) * h2) % np.uint64(m)
-            acc &= (bm[(idx >> np.uint64(3)).astype(np.int64)]
-                    >> (idx & np.uint64(7)).astype(np.uint8)) & 1 == 1
-        left[out_col] = acc
+        left[out_col] = _bits_set(
+            np.frombuffer(right["bitmap"].iloc[0], dtype=np.uint8),
+            left["__h1"].to_numpy(dtype=np.int64),
+            left["__h2"].to_numpy(dtype=np.int64), m, k)
         return left
 
     probed = (dfh.groupBy("__bucket")
@@ -294,18 +293,21 @@ def filter_unseen(
 ) -> DataFrame:
     """Rows of ``frontier`` whose ``key`` is not in ``seen``.
 
-    Bloom path: definitely-new rows (bloom negative) pass with zero
-    shuffle; maybe-seen rows are exact-confirmed by a left-anti join so
-    false positives never drop URLs. ``seen=None`` -> identity.
+    Bloom path: definitely-new rows (bloom negative) skip the join;
+    maybe-seen rows are exact-confirmed by a left-anti join so false
+    positives never drop URLs. The filter stays a distributed (bucket,
+    bitmap) table probed by cogroup, so the returned lazy frame holds no
+    broadcast. ``seen=None`` -> identity.
     """
     if seen is None:
         return frontier
     if not bloom:
         return frontier.join(seen.select(key), key, "left_anti")
 
-    bf = build_bloom(seen, key, bits_per_bucket=bits_per_bucket,
-                     num_hashes=num_hashes, buckets=buckets)
-    probed = probe_bloom_broadcast(frontier, bf, key)
+    shape = dict(bits_per_bucket=bits_per_bucket, num_hashes=num_hashes,
+                 buckets=buckets)
+    table = or_reduce_bitmaps(build_bloom_partials(seen, key, **shape))
+    probed = probe_bloom_bucketed(frontier, table, key, **shape)
     definite_new = probed.filter(~F.col("__maybe")).drop("__maybe")
     candidates = probed.filter(F.col("__maybe")).drop("__maybe")
     confirmed_new = candidates.join(seen.select(key), key, "left_anti")

@@ -10,9 +10,16 @@ def _df(spark, n=3):
     return spark.range(n).selectExpr("id", "cast(id as string) as s")
 
 
+def _commit(store, spark, gen, tables, stats=None):
+    """Stage each ``name -> row count`` table of round ``gen``, then
+    commit the staged paths."""
+    store.write_round(gen, {name: store.stage_table(gen, name, _df(spark, n))
+                            for name, n in tables.items()}, stats=stats)
+
+
 def test_commit_then_read(spark, tmp_path):
     store = CheckpointStore(str(tmp_path))
-    store.write_round(0, {"t": _df(spark)}, stats={"x": 1})
+    _commit(store, spark, 0, {"t": 3}, stats={"x": 1})
     assert store.latest_gen() == 0
     assert store.manifest(0)["stats"] == {"x": 1}
     assert store.read(spark, 0, "t").count() == 3
@@ -20,7 +27,7 @@ def test_commit_then_read(spark, tmp_path):
 
 def test_uncommitted_gen_invisible_and_cleaned(spark, tmp_path):
     store = CheckpointStore(str(tmp_path))
-    store.write_round(0, {"t": _df(spark)})
+    _commit(store, spark, 0, {"t": 3})
     # simulate a kill: staged table for gen 1 but no manifest
     store.stage_table(1, "t", _df(spark, 5))
     assert store.latest_gen() == 0            # uncommitted -> invisible
@@ -29,7 +36,7 @@ def test_uncommitted_gen_invisible_and_cleaned(spark, tmp_path):
     p = store2.stage_table(1, "other", _df(spark, 2))
     gd = os.path.dirname(p)
     assert sorted(os.listdir(gd)) == ["other"]  # stale 't' wiped
-    store2.write_round(1, {}, staged={"other": p})
+    store2.write_round(1, {"other": p})
     assert store2.latest_gen() == 1
     assert store2.read(spark, 1, "other").count() == 2
 
@@ -38,14 +45,14 @@ def test_restage_same_run_keeps_earlier_tables(spark, tmp_path):
     store = CheckpointStore(str(tmp_path))
     pa = store.stage_table(0, "a", _df(spark, 1))
     pb = store.stage_table(0, "b", _df(spark, 2))  # must NOT wipe 'a'
-    store.write_round(0, {}, staged={"a": pa, "b": pb})
+    store.write_round(0, {"a": pa, "b": pb})
     assert store.read(spark, 0, "a").count() == 1
     assert store.read(spark, 0, "b").count() == 2
 
 
 def test_manifest_commit_is_atomic_rename(spark, tmp_path):
     store = CheckpointStore(str(tmp_path))
-    store.write_round(0, {"t": _df(spark)})
+    _commit(store, spark, 0, {"t": 3})
     mdir = os.path.join(str(tmp_path), "_manifests")
     assert os.listdir(mdir) == ["0.json"]     # no .tmp leftovers
     with open(os.path.join(mdir, "0.json")) as f:
@@ -55,10 +62,10 @@ def test_manifest_commit_is_atomic_rename(spark, tmp_path):
 
 def test_read_all_unions_rounds(spark, tmp_path):
     store = CheckpointStore(str(tmp_path))
-    store.write_round(0, {"r": _df(spark, 2)})
-    store.write_round(1, {"r": _df(spark, 3)})
+    _commit(store, spark, 0, {"r": 2})
+    _commit(store, spark, 1, {"r": 3})
     assert store.read_all(spark, "r").count() == 5
-    assert store.read_all(spark, "r", upto_gen=0).count() == 2
+    assert store.read(spark, 0, "r").count() == 2
     assert store.read_all(spark, "absent") is None
 
 

@@ -565,22 +565,6 @@ def test_robots_auto_switches_to_cogroup(spark, site, tmp_path, monkeypatch):
     assert blocked and all(r.domain == "mirror-city.example" for r in blocked)
 
 
-def test_crawl_lang_detect_column(spark, site, tmp_path):
-    """lang_detect=True enriches results with the trigram-profile
-    classifier's verdict — column-for-column what classify() returns on
-    the same text (the production LLM-data path wired into the engine)."""
-    from siren_spark.functions.langid import classify
-
-    cfg = CrawlConfig(budget_per_host=BUDGET, window_start=WINDOW_START,
-                      window_end=WINDOW_END, keywords=SPEC.keywords,
-                      use_bloom=False, max_rounds=2, lang_detect=True)
-    res = run_crawl(spark, pages_df(spark, site.pages),
-                    seeds_df(spark, site.seeds), cfg,
-                    str(tmp_path / "ck_lang"))
-    rows = res.results.select("text", "lang").collect()
-    assert rows and all(r.lang == classify(r.text) for r in rows)
-
-
 def test_bucketed_pipeline_resume_equals_uninterrupted(
         spark, site, engine, tmp_path, monkeypatch):
     """Round pipelining now stays effective in bucketed-bloom mode (the
@@ -607,6 +591,43 @@ def test_bucketed_pipeline_resume_equals_uninterrupted(
     sa = {r.url_canon for r in resumed.seen.collect()}
     sb = {r.url_canon for r in engine.seen.collect()}
     assert sa == sb
+
+
+def test_bucketed_resume_with_another_bloom_shape(spark, site, engine,
+                                                 tmp_path, monkeypatch):
+    """The committed bitmap table is probed with the run's shape, so a
+    resume with other bloom bits or buckets must not read it: a table of
+    another shape crashes the OR-reduce (bits) or answers 'definitely
+    new' for seen keys (buckets). Resume rebuilds the filter instead and
+    crawls identically to the uninterrupted run."""
+    import dataclasses
+    import shutil
+
+    from siren_spark.operators import seen
+    monkeypatch.setattr(seen, "BLOOM_BROADCAST_MAX_BYTES", 0)
+    cfg = CrawlConfig(
+        budget_per_host=BUDGET, window_start=WINDOW_START,
+        window_end=WINDOW_END, keywords=SPEC.keywords,
+        use_bloom=True, bloom_bits=1 << 16, bloom_buckets=4, salt_buckets=4,
+    )
+    killed = str(tmp_path / "ck_killed")
+    with pytest.raises(RuntimeError, match="simulated kill"):
+        run_crawl(spark, pages_df(spark, site.pages),
+                  seeds_df(spark, site.seeds), cfg, killed,
+                  fail_after_round=1)
+    b = sorted(_result_key(r.asDict()) for r in engine.results.collect())
+    sb = {r.url_canon for r in engine.seen.collect()}
+    for name, shape in (("bits", {"bloom_bits": 1 << 12}),
+                        ("buckets", {"bloom_buckets": 2})):
+        ckpt = str(tmp_path / f"ck_{name}")
+        shutil.copytree(killed, ckpt)
+        resumed = run_crawl(spark, pages_df(spark, site.pages),
+                            seeds_df(spark, site.seeds),
+                            dataclasses.replace(cfg, **shape), ckpt,
+                            resume=True)
+        a = sorted(_result_key(r.asDict()) for r in resumed.results.collect())
+        assert a == b, name
+        assert {r.url_canon for r in resumed.seen.collect()} == sb, name
 
 
 def test_completed_crawl_leaves_clean_checkpoint(spark, site, tmp_path):
@@ -722,30 +743,51 @@ def test_politeness_rank_strategies_equivalent(spark, monkeypatch):
 
 
 def test_seen_split_confirm_equals_broadcast_confirm(spark, monkeypatch):
-    """Above BROADCAST_FETCH_MAX the maybe-seen confirm splits the
-    frontier into definite-new and candidate rows and sort-merge-joins
-    the candidates against the seen set; under it the candidate keys
-    broadcast into the seen scan. Both must give every URL the same
-    status."""
+    """Every seen filter (none, a driver-side BloomFilter, its (bucket,
+    bitmap) table) feeds the same exact confirm. Above
+    BROADCAST_FETCH_MAX the confirm splits the frontier into
+    definite-new and candidate rows and sort-merge-joins the candidates
+    against the seen set; under it the candidate keys broadcast into
+    the seen scan. Both must give every URL the status a pure-Python
+    walk of the same frontier gives."""
     import siren_spark.crawl as crawl_mod
     from siren_spark.crawl import _annotate_round, _seeds_to_frontier
-    from siren_spark.operators.seen import build_bloom
+    from siren_spark.operators.seen import (
+        build_bloom, build_bloom_partials, or_reduce_bitmaps,
+    )
+    from siren_spark.urls import canonicalize_url, registrable_domain
 
-    seeds = spark.createDataFrame(
-        [(f"https://d{i % 7}.example/p/{i}",) for i in range(500)],
-        "url string")
+    urls = [f"https://d{i % 7}.example/p/{i}" for i in range(500)]
+    seeds = spark.createDataFrame([(u,) for u in urls], "url string")
     fr = _seeds_to_frontier(seeds)
-    seen = (spark.createDataFrame(
-        [(f"https://d{i % 7}.example/p/{i}",) for i in range(0, 500, 3)],
-        "url string").select(F.col("url").alias("url_canon")))
-    bloom = build_bloom(seen, "url_canon",
-                        bits_per_bucket=1 << 14, buckets=4)
+    seen_urls = {canonicalize_url(u) for u in urls[::3]}
+    seen = spark.createDataFrame([(u,) for u in sorted(seen_urls)],
+                                 "url_canon string")
+    shape = dict(bits_per_bucket=1 << 14, buckets=4)
+    filters = {
+        "none": None,
+        "driver": build_bloom(seen, "url_canon", **shape),
+        "table": or_reduce_bitmaps(
+            build_bloom_partials(seen, "url_canon", **shape)),
+    }
+
+    # pure Python: seen keys are deduped; each domain schedules its
+    # first 20 unseen url_canons (equal priorities), defers the rest
+    want, per_domain = {}, {}
+    for c in sorted(canonicalize_url(u) for u in urls):
+        if c in seen_urls:
+            want[c] = "deduped"
+            continue
+        d = registrable_domain(c)
+        per_domain[d] = per_domain.get(d, 0) + 1
+        want[c] = "scheduled" if per_domain[d] <= 20 else "deferred"
 
     default_max = crawl_mod.BROADCAST_FETCH_MAX
 
-    def statuses(fetch_max):
+    def statuses(bloom, fetch_max):
         monkeypatch.setattr(crawl_mod, "BROADCAST_FETCH_MAX", fetch_max)
-        cfg = CrawlConfig(budget_per_host=20)
+        cfg = CrawlConfig(budget_per_host=20, bloom_bits=1 << 14,
+                          bloom_buckets=4)
         caches: list = []
         ann = _annotate_round(fr, cfg=cfg, bloom=bloom, seen_exact=seen,
                               cache_registry=caches, frontier_rows=500)
@@ -755,12 +797,13 @@ def test_seen_split_confirm_equals_broadcast_confirm(spark, monkeypatch):
             for c in caches:
                 c.unpersist()
 
-    split, split_caches = statuses(0)
-    bcast, bcast_caches = statuses(default_max)
-    assert split == bcast
-    # the split path really ran: it caches the re-unioned frame too
-    assert len(split_caches) == len(bcast_caches) + 1
-    by = {s: sum(1 for _, x in split if x == s)
+    for name, bloom in filters.items():
+        split, split_caches = statuses(bloom, 0)
+        bcast, bcast_caches = statuses(bloom, default_max)
+        assert split == bcast == set(want.items()), name
+        # the split path really ran: it caches the re-unioned frame too
+        assert len(split_caches) == len(bcast_caches) + 1, name
+    by = {s: sum(1 for x in want.values() if x == s)
           for s in ("deduped", "scheduled", "deferred")}
     assert by == {"deduped": 167, "scheduled": 140, "deferred": 193}
 

@@ -138,6 +138,32 @@ def test_filter_unseen_bloom_equals_exact(spark):
     assert len(exact) == 200
 
 
+def test_filter_unseen_holds_no_filter_broadcast(spark, monkeypatch):
+    """filter_unseen returns a lazy frame: its filter stays a
+    distributed (bucket, bitmap) table, so no BloomFilter broadcast is
+    made that the caller could never release."""
+    from siren_spark.operators.seen import BloomFilter
+
+    bloom_broadcasts = []
+    real_broadcast = spark.sparkContext.broadcast
+
+    def broadcast(v):
+        if isinstance(v, BloomFilter):
+            bloom_broadcasts.append(v)
+        return real_broadcast(v)
+
+    monkeypatch.setattr(spark.sparkContext, "broadcast", broadcast)
+    frontier = spark.createDataFrame(
+        [(f"https://x.example/{i}",) for i in range(60)], "url_canon string")
+    seen = spark.createDataFrame(
+        [(f"https://x.example/{i}",) for i in range(0, 60, 4)],
+        "url_canon string")
+    out = filter_unseen(frontier, seen, bloom=True,
+                        bits_per_bucket=1 << 12, buckets=2)
+    assert out.count() == 45
+    assert bloom_broadcasts == []
+
+
 @settings(max_examples=15, deadline=None)
 @given(st.lists(st.text(alphabet="ab/", min_size=1, max_size=6), max_size=8))
 def test_robots_matcher_never_crashes(paths):

@@ -252,6 +252,50 @@ def test_annotate_threshold_tier_plan(spark):
     assert "BroadcastHashJoin" in plan, plan
 
 
+def test_annotate_without_bloom_runs_the_fused_dup_window(spark):
+    """A crawl with no Bloom filter runs the same seen plan as one with
+    a filter: every key is a maybe, the dup window partitions by
+    (domain, __salt) like the politeness windows, and the exact confirm
+    broadcasts the frontier keys into the seen scan (no sort-merge
+    join). Executed-plan pin, same protocol as
+    test_annotate_single_full_frontier_exchange."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from siren_spark.crawl import (
+        CrawlConfig, _annotate_round, _seeds_to_frontier,
+    )
+
+    seeds = spark.createDataFrame(
+        [(f"https://d{i % 7}.example/p/{i}",) for i in range(500)],
+        "url string")
+    fr = _seeds_to_frontier(seeds)
+    seen = (spark.createDataFrame(
+        [(f"https://d{i % 7}.example/p/{i}",) for i in range(0, 500, 3)],
+        "url string").select(F.col("url").alias("url_canon")))
+    cfg = CrawlConfig(budget_per_host=20, use_bloom=False)
+    caches: list = []
+    ann = _annotate_round(fr, cfg=cfg, bloom=None, seen_exact=seen,
+                          cache_registry=caches, frontier_rows=500)
+    try:
+        ann.collect()
+        plan = ann._jdf.queryExecution().executedPlan().toString()
+    finally:
+        for c in caches:
+            c.unpersist()
+    # the dup window: lag(url_canon) partitioned by (domain, __salt)
+    dup_parts = re.findall(
+        r"Window \[lag\(url_canon#\d+, -1, null\) windowspecdefinition"
+        r"\((\w+)#\d+L?, (\w+)#\d+L?, url_canon#\d+ ASC", plan)
+    assert dup_parts and set(dup_parts) == {("domain", "__salt")}, plan
+    ex = re.findall(
+        r"ShuffleQueryStage \d+[^\n]*\n\s*\+- Exchange hashpartitioning"
+        r"\(domain#\d+, __salt#\d+L?, \d+\)", plan)
+    assert ex, plan
+    assert "SortMergeJoin" not in plan, plan
+
+
 def test_crawl_gate_is_self_checking(spark):
     """The crawl_end_to_end gate output embeds the oracle simulator's
     expected row digest next to the engine's (distributively computed)

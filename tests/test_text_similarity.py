@@ -195,39 +195,6 @@ def test_ann_ivf_topk_recall_and_cells(spark):
     assert recall >= 0.4, recall
 
 
-def test_langid_ngram_classifier(spark):
-    """Production-shaped lang-ID: trigram profiles via pandas UDF —
-    separates en/de/fr/es prose and falls back to 'und' on short or
-    null text. Deterministic and partition-independent."""
-    from siren_spark.functions.langid import classify, langid_udf
-
-    samples = [
-        (1, "the children walked to the school because they wanted to "
-            "learn about the history of their city", "en"),
-        (2, "die kinder gingen zur schule weil sie etwas ueber die "
-            "geschichte ihrer stadt lernen wollten", "de"),
-        (3, "les enfants sont alles a l ecole parce qu ils voulaient "
-            "apprendre l histoire de leur ville", "fr"),
-        (4, "los ninos caminaron a la escuela porque querian aprender "
-            "sobre la historia de su ciudad", "es"),
-        (5, "xy", "und"),
-        (6, None, "und"),
-    ]
-    for _id, text, want in samples:
-        if text is not None:
-            assert classify(text) == want, (text, classify(text))
-    df = spark.createDataFrame([(i, t) for i, t, _ in samples],
-                               "doc_id long, text string")
-    got = {r.doc_id: r.lang for r in
-           df.withColumn("lang", langid_udf()(F.col("text"))).collect()}
-    assert got == {i: want for i, _, want in samples}
-    # partition-independent
-    got2 = {r.doc_id: r.lang for r in
-            df.repartition(5).withColumn(
-                "lang", langid_udf()(F.col("text"))).collect()}
-    assert got2 == got
-
-
 def test_similarity_results_partition_invariant(spark, docs):
     """Dedup outputs are a pure function of the data, not of the
     physical partitioning (the determinism the N-vs-4N comparison and
