@@ -125,6 +125,14 @@ class CrawlConfig:
         if self.fetch_join not in FETCH_JOINS:
             raise ValueError(f"fetch_join must be one of {FETCH_JOINS}, "
                              f"got {self.fetch_join!r}")
+        for name in ("budget_per_host", "salt_buckets", "bloom_buckets"):
+            if getattr(self, name) < 1:
+                raise ValueError(f"{name} must be at least 1, "
+                                 f"got {getattr(self, name)!r}")
+        # each bucket's bitmap is bloom_bits // 8 bytes
+        if self.bloom_bits < 8 or self.bloom_bits % 8:
+            raise ValueError("bloom_bits must be a positive multiple of 8, "
+                             f"got {self.bloom_bits!r}")
 
 
 RESULT_COLS = ["source", "url", "title", "author", "location", "published",
@@ -637,11 +645,11 @@ def run_crawl(
     # staging launch right after annotate (overlapping fetch+extract);
     # the derived writes, seen/headline compactions and the pipelined
     # next-round annotate overlap at round end; the commit overlaps the
-    # pipelined annotate's tail. Sized to the maximum concurrent task
-    # set (3 writes + bloom + 2 compactions + prestage = 7) plus one so
-    # the hl-compaction task — which WAITS on the results-write future —
-    # can never be queued behind it (a same-pool wait on a queued task
-    # would deadlock).
+    # pipelined annotate's tail. Sized above the maximum concurrent task
+    # set (2 writes — results and counters — + bloom + 2 compactions +
+    # prestage = 6), so the hl-compaction task — which WAITS on the
+    # results-write future — can never be queued behind it (a same-pool
+    # wait on a queued task would deadlock).
     pool = ThreadPoolExecutor(max_workers=8)
     # the robots gate (operators/robots.py) is built once per run: at
     # most one matcher broadcast, released in the finally below

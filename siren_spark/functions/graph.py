@@ -37,8 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-__all__ = ["synthetic_link_graph", "pagerank", "frontier_priority",
-           "anchor_text_rollup"]
+__all__ = ["synthetic_link_graph", "pagerank", "anchor_text_rollup"]
 
 
 def synthetic_link_graph(
@@ -166,28 +165,6 @@ def pagerank(
         edges_deg.unpersist()
         node_ids.unpersist()
     return ranks
-
-
-def frontier_priority(
-    ranks: DataFrame,
-    frontier: DataFrame,
-    *,
-    id_col: str = "node_id",
-    frontier_id_col: str = "node_id",
-) -> DataFrame:
-    """Attach pr_scaled to a frontier frame (left join; unranked URLs —
-    never-seen hosts — get priority 0 so they sort last, not NULL-first
-    surprises). The caller orders its fetch schedule by
-    (pr_scaled DESC, id) downstream."""
-    r = ranks.select(
-        F.col(id_col).alias(frontier_id_col),
-        F.col("pr_scaled").alias("__pr"))
-    return (
-        frontier.join(r, frontier_id_col, "left")
-        .withColumn("priority",
-                    F.coalesce(F.col("__pr"), F.lit(0)).cast("long"))
-        .drop("__pr")
-    )
 
 
 def anchor_text_rollup(

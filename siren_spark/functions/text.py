@@ -4,9 +4,7 @@ DataFrame -> DataFrame functions over a text column: language ID,
 token counting (whitespace + BPE-ish pre-tokenizer), quality scoring,
 and document fingerprinting. Pure JVM column expressions so they stay
 inside whole-stage codegen and scale as flat maps — no shuffle, no skew
-surface, safe at any corpus size. The one exception is the BPE merge
-loop (with_bpe_token_count_merged): inherently sequential per word, so
-it runs as an Arrow-batched pandas UDF with a per-batch word cache.
+surface, safe at any corpus size.
 
 Determinism: integer outputs are BIGINT, float outputs are rounded at a
 fixed scale, so results are independent of partitioning and execution
@@ -46,87 +44,6 @@ def with_bpe_token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
         "n_bpe_tokens",
         F.size(F.regexp_extract_all(F.lower(F.col(text_col)),
                                     F.lit(BPE_PRETOKEN_RE), 0)).cast("long"))
-
-
-# A small embedded rank-ordered merge table (most-frequent English pairs)
-# so the merge loop is real and deterministic without a model file; pass
-# a trained vocabulary's merges list for production counts.
-DEFAULT_BPE_MERGES: tuple[tuple[str, str], ...] = (
-    ("t", "h"), ("th", "e"), ("i", "n"), ("a", "n"), ("an", "d"),
-    ("e", "r"), ("o", "n"), ("r", "e"), ("o", "r"), ("e", "n"),
-    ("a", "t"), ("e", "s"), ("o", "u"), ("in", "g"), ("s", "t"),
-)
-
-
-def with_bpe_token_count_merged(
-    df: DataFrame,
-    text_col: str = "text",
-    *,
-    merges: list[tuple[str, str]] | None = None,
-    out_col: str = "n_bpe_tokens_merged",
-) -> DataFrame:
-    """Add ``n_bpe_tokens_merged`` — the REAL BPE token count: each
-    pre-token (same ``BPE_PRETOKEN_RE`` split as
-    :func:`with_bpe_token_count`) explodes to characters, then the
-    rank-ordered ``merges`` table is applied greedily (lowest rank
-    first, all occurrences per pass — standard BPE apply) and the
-    surviving symbols are counted.
-
-    Bounds, by construction: ``n_bpe_tokens <= n_bpe_tokens_merged <=
-    len(chars)`` — a pre-token is >= 1 symbols however far merges get,
-    and merges only ever shrink the character-level count.
-
-    This is a pandas UDF (the merge loop is inherently sequential per
-    word) with a per-batch word cache: natural text repeats words
-    heavily, so amortized cost per row is near the distinct-word count.
-    Deterministic and partition-independent — safe for the value-hash
-    oracle style of comparison, though there is no SQL oracle for a
-    merge loop.
-    """
-    import re as _re
-
-    table = {pair: i for i, pair in
-             enumerate(merges if merges is not None else DEFAULT_BPE_MERGES)}
-    pat = _re.compile(BPE_PRETOKEN_RE)
-
-    @F.pandas_udf("long")
-    def _count(texts: pd.Series) -> pd.Series:
-        cache: dict[str, int] = {}
-
-        def word_tokens(w: str) -> int:
-            n = cache.get(w)
-            if n is not None:
-                return n
-            syms = list(w)
-            while len(syms) > 1:
-                best_rank, best_pair = None, None
-                for i in range(len(syms) - 1):
-                    r = table.get((syms[i], syms[i + 1]))
-                    if r is not None and (best_rank is None or r < best_rank):
-                        best_rank, best_pair = r, (syms[i], syms[i + 1])
-                if best_pair is None:
-                    break
-                out, i = [], 0
-                while i < len(syms):
-                    if (i < len(syms) - 1
-                            and (syms[i], syms[i + 1]) == best_pair):
-                        out.append(syms[i] + syms[i + 1])
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                syms = out
-            cache[w] = len(syms)
-            return cache[w]
-
-        def doc(t: str | None) -> int:
-            if not t:
-                return 0
-            return sum(word_tokens(w) for w in pat.findall(t.lower()))
-
-        return texts.map(doc)
-
-    return df.withColumn(out_col, _count(F.col(text_col)))
 
 
 def with_langid(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -339,13 +256,12 @@ def dedup_exact(df: DataFrame, text_col: str = "text",
                  F.count(F.lit(1)).alias("dup_count")))
 
 
-__all__ = ["with_token_counts", "with_bpe_token_count",
-           "with_bpe_token_count_merged", "with_langid",
+__all__ = ["with_token_counts", "with_bpe_token_count", "with_langid",
            "with_quality_score", "with_text_stats", "with_fingerprint",
            "with_repetition_stats", "with_pii_scrubbed",
            "with_normalized_text", "CONTROL_CHAR_RE", "WHITESPACE_RUN_RE",
            "dedup_exact", "BPE_PRETOKEN_RE", "STOPWORDS",
-           "DEFAULT_BPE_MERGES", "PII_EMAIL_RE", "PII_PHONE_RE"]
+           "PII_EMAIL_RE", "PII_PHONE_RE"]
 
 
 def winnow_fingerprints(

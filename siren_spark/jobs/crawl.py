@@ -126,18 +126,7 @@ def main(argv: list[str] | None = None) -> None:
     from siren_spark.sources.pages import IcebergPageStore, ParquetPageStore
 
     args = parse_args(argv)
-    spark = get_spark(app_name="siren_spark_crawl")
-    if args.pages.startswith("iceberg:"):
-        store = IcebergPageStore(args.pages[len("iceberg:"):])
-    else:
-        store = ParquetPageStore(args.pages)
-    pages = store.read(spark)
-    seeds = spark.read.parquet(args.seeds)
-    if args.scraper and "source" in seeds.columns:
-        from pyspark.sql import functions as F
-        seeds = seeds.filter(F.col("source") == args.scraper)
-    robots = spark.read.parquet(args.robots) if args.robots else None
-
+    # a crawl shape no round can run fails here, before a session starts
     cfg = CrawlConfig(
         budget_per_host=args.budget,
         salt_buckets=args.salt_buckets,
@@ -151,6 +140,17 @@ def main(argv: list[str] | None = None) -> None:
         keywords=list(args.keywords),
         verbose=args.verbose,
     )
+    spark = get_spark(app_name="siren_spark_crawl")
+    if args.pages.startswith("iceberg:"):
+        store = IcebergPageStore(args.pages[len("iceberg:"):])
+    else:
+        store = ParquetPageStore(args.pages)
+    pages = store.read(spark)
+    seeds = spark.read.parquet(args.seeds)
+    if args.scraper and "source" in seeds.columns:
+        from pyspark.sql import functions as F
+        seeds = seeds.filter(F.col("source") == args.scraper)
+    robots = spark.read.parquet(args.robots) if args.robots else None
     res = run_crawl(spark, pages, seeds, cfg, args.checkpoint,
                     robots=robots, resume=args.resume)
     n = res.results.count() if res.results is not None else 0

@@ -7,14 +7,19 @@ groups for ``User-agent: *``; empty Disallow value allows everything; a
 domain with no robots row is fully allowed (§2.3.1.2: unavailable →
 unrestricted). '*' wildcards and '$' anchors are supported.
 
-A rules table of up to ``ROBOTS_BROADCAST_MAX`` rows is parsed once,
-broadcast, and matched inside a vectorized pandas UDF; a larger one is
-cogrouped with the frontier by domain (:class:`RobotsGate`).
+One matcher, :class:`RobotsMatcher`, holds the rule: both deliveries of
+the gate call it. A rules table of up to ``ROBOTS_BROADCAST_MAX`` rows
+is parsed once into one matcher, broadcast, and applied inside a pandas
+UDF; a larger one is cogrouped with the frontier by domain, and each
+domain's group builds its matcher from its own rows
+(:class:`RobotsGate`). A domain with more than one rules row is
+rejected with ``ValueError`` by either delivery.
 """
 
 from __future__ import annotations
 
 import re
+from collections.abc import Iterable
 from urllib.parse import urlsplit
 
 import pandas as pd
@@ -67,13 +72,18 @@ def _compile(pattern: str) -> re.Pattern[str]:
 
 
 class RobotsMatcher:
-    """Per-domain compiled rule set; picklable for broadcast."""
+    """Per-domain compiled rule set; picklable for broadcast. The one
+    matcher of both gate deliveries (broadcast UDF and cogroup)."""
 
-    def __init__(self, rows: list[tuple[str, str]]):
-        # rows: (domain, robots_body)
-        self.rules: dict[str, list[tuple[bool, str]]] = {
-            domain: parse_robots(body) for domain, body in rows
-        }
+    def __init__(self, rows: Iterable[tuple[str, str]]):
+        # rows: (domain, robots_body); one row per domain, since two
+        # rows would make the gate's verdict depend on row order
+        self.rules: dict[str, list[tuple[bool, str]]] = {}
+        for domain, body in rows:
+            if domain in self.rules:
+                raise ValueError(
+                    f"more than one robots rules row for domain {domain!r}")
+            self.rules[domain] = parse_robots(body)
         self._compiled: dict[str, list[tuple[bool, int, re.Pattern[str]]]] = {}
 
     def _get(self, domain: str):
@@ -85,44 +95,22 @@ class RobotsMatcher:
         return self._compiled[domain]
 
     def allowed(self, domain: str, url: str) -> bool:
+        """Longest-match winner between Allow/Disallow (RFC 9309
+        §2.2.2); a domain without rules is fully allowed."""
         compiled = self._get(domain)
         if not compiled:
             return True
-        return _match_one(compiled, url)
-
-    def allowed_batch(self, domains: pd.Series, urls: pd.Series) -> list[bool]:
-        """Vectorized gate: group the batch by domain so rule lookup and
-        compilation happen once per unique domain — per-row work is
-        regex matching only."""
-        out = [True] * len(domains)
-        dvals = domains.to_numpy()
-        uvals = urls.to_numpy()
-        idx_by_dom: dict[str, list[int]] = {}
-        for i, d in enumerate(dvals):
-            idx_by_dom.setdefault(d, []).append(i)
-        for d, idxs in idx_by_dom.items():
-            compiled = self._get(d)
-            if not compiled:
-                continue
-            for i in idxs:
-                out[i] = _match_one(compiled, uvals[i])
-        return out
-
-
-def _match_one(compiled: list[tuple[bool, int, re.Pattern[str]]],
-               url: str) -> bool:
-    """Longest-match winner between Allow/Disallow (RFC 9309 §2.2.2)."""
-    parts = urlsplit(url)
-    path = parts.path or "/"
-    if parts.query:
-        path += "?" + parts.query
-    best_len = -1
-    best_allow = True
-    for allow, plen, rx in compiled:
-        if rx.match(path) and plen > best_len:
-            best_len = plen
-            best_allow = allow
-    return best_allow
+        parts = urlsplit(url)
+        path = parts.path or "/"
+        if parts.query:
+            path += "?" + parts.query
+        best_len = -1
+        best_allow = True
+        for allow, plen, rx in compiled:
+            if rx.match(path) and plen > best_len:
+                best_len = plen
+                best_allow = allow
+        return best_allow
 
 
 def robots_annotate_cogroup(
@@ -138,8 +126,8 @@ def robots_annotate_cogroup(
 
     At a million-domain robots table the broadcast matcher is a driver
     OOM; cogrouping ships each task exactly the rule rows of the
-    domains it holds, the task compiles them once, and matching is
-    vectorized over that domain's urls. Costs one shuffle of the
+    domains it holds, and each domain's group builds a
+    :class:`RobotsMatcher` from its rows (compiled once per domain). Costs one shuffle of the
     (narrow) frontier by domain — which the politeness window needs
     anyway. Adds boolean ``out_col``.
     """
@@ -152,17 +140,9 @@ def robots_annotate_cogroup(
     def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if len(left) == 0:
             return pd.DataFrame(columns=[*in_cols, out_col])
-        # one rules row per domain (dupes would make the gate ambiguous)
-        assert len(right) <= 1, f"{len(right)} robots rows for one domain"
-        if len(right) == 0:
-            left[out_col] = True
-            return left
-        compiled = [(allow, len(p), _compile(p))
-                    for allow, p in parse_robots(right["rules"].iloc[0])]
-        if not compiled:
-            left[out_col] = True
-            return left
-        left[out_col] = [_match_one(compiled, u) for u in left[url_col]]
+        m = RobotsMatcher(zip(right["domain"], right["rules"]))
+        left[out_col] = [m.allowed(d, u)
+                         for d, u in zip(left[domain_col], left[url_col])]
         return left
 
     return (frontier.groupBy(domain_col)
@@ -209,7 +189,8 @@ class RobotsGate:
 
         @F.pandas_udf("boolean")
         def allowed_udf(domains: pd.Series, urls: pd.Series) -> pd.Series:
-            return pd.Series(bc.value.allowed_batch(domains, urls),
+            m = bc.value
+            return pd.Series([m.allowed(d, u) for d, u in zip(domains, urls)],
                              dtype=bool)
 
         return frontier.withColumn(

@@ -12,7 +12,13 @@ URLs (SURVEY.md §4.3).
 Design notes for cluster scale:
 - hashes (xxhash64) are computed JVM-side; Python only ever sees int64
   numpy arrays — no per-row string crossings.
-- the filter is bucketed by ``hash % buckets``. Two probe paths:
+- one layout for the build and both probes: a key's bucket is its
+  first hash floor-mod ``buckets`` (``F.pmod`` in the JVM, for the
+  build's shuffle and the cogroup key; ``np.mod`` on int64 in numpy)
+  and its k bit positions are ``(h1 + i*h2) mod bits_per_bucket`` in
+  uint64 — both from ``_bloom_layout``, which every build and probe
+  calls through :class:`BloomFilter`. For a power-of-two bucket count
+  floor-mod equals the unsigned ``h1 % buckets`` rule. Two probe paths:
   * **broadcast** (small filters): partials OR-combine on the driver and
     the whole filter broadcasts — every executor holds all buckets.
     Right up to ~tens of MB of total bitmap (the crawl switches above
@@ -37,7 +43,7 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _SEED2 = 0x9E3779B9  # second hash = xxhash64(col, seed2) for double hashing
@@ -53,6 +59,25 @@ def bloom_bucketed(bits_per_bucket: int, buckets: int) -> bool:
     return (bits_per_bucket // 8) * buckets > BLOOM_BROADCAST_MAX_BYTES
 
 
+def _bucket_col(h1: Column, buckets: int) -> Column:
+    """The JVM side of the bucket rule: ``h1`` floor-mod ``buckets``,
+    the same as ``np.mod`` on int64 in :func:`_bloom_layout`."""
+    return F.pmod(h1, F.lit(buckets))
+
+
+def _bloom_layout(h1: np.ndarray, h2: np.ndarray, m: int, k: int,
+                 buckets: int) -> tuple[np.ndarray, np.ndarray]:
+    """The one bucket/bit layout of the filter: bucket ids ``h1``
+    floor-mod ``buckets`` and an (n, k) array of bit positions
+    ``(h1 + i*h2) mod m``, i < k, in uint64 arithmetic (double hashing
+    over the JVM's int64 xxhash64 pair)."""
+    h1 = np.asarray(h1, dtype=np.int64)
+    u1 = h1.view(np.uint64)[:, None]
+    u2 = np.asarray(h2, dtype=np.int64).view(np.uint64)[:, None]
+    pos = (u1 + np.arange(k, dtype=np.uint64) * u2) % np.uint64(m)
+    return np.mod(h1, buckets), pos
+
+
 @dataclass
 class BloomFilter:
     """Bucketed Bloom filter over xxhash64 keys (double hashing)."""
@@ -62,29 +87,32 @@ class BloomFilter:
     buckets: int
     bitmaps: dict[int, np.ndarray]  # bucket -> uint8 bitmap
 
-    def might_contain_np(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-        bucket_ids = (h1.astype(np.uint64) % np.uint64(self.buckets)).astype(np.int64)
-        out = np.zeros(len(h1), dtype=bool)
+    def _by_bucket(self, h1: np.ndarray, h2: np.ndarray):
+        """(bucket, row mask, bit positions) per bucket of the keys."""
+        bucket_ids, pos = _bloom_layout(h1, h2, self.bits_per_bucket,
+                                        self.num_hashes, self.buckets)
         for b in np.unique(bucket_ids):
-            bm = self.bitmaps.get(int(b))
+            sel = bucket_ids == b
+            yield int(b), sel, pos[sel]
+
+    def add_np(self, h1: np.ndarray, h2: np.ndarray) -> None:
+        """Set the k bits of every key in its bucket's bitmap."""
+        for b, _, pos in self._by_bucket(h1, h2):
+            bm = self.bitmaps.setdefault(
+                b, np.zeros(self.bits_per_bucket // 8, dtype=np.uint8))
+            np.bitwise_or.at(bm, (pos >> np.uint64(3)).astype(np.intp),
+                             np.left_shift(1, pos & np.uint64(7)).astype(np.uint8))
+
+    def might_contain_np(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
+        """True where all k bits of the key are set (False: definitely
+        not in the filter)."""
+        out = np.zeros(len(h1), dtype=bool)
+        for b, sel, pos in self._by_bucket(h1, h2):
+            bm = self.bitmaps.get(b)
             if bm is not None:
-                sel = bucket_ids == b
-                out[sel] = _bits_set(bm, h1[sel], h2[sel],
-                                     self.bits_per_bucket, self.num_hashes)
+                out[sel] = ((bm[pos >> np.uint64(3)] >> (pos & np.uint64(7)))
+                            & 1).all(axis=1)
         return out
-
-
-def _bits_set(bm: np.ndarray, h1: np.ndarray, h2: np.ndarray, m: int,
-              k: int) -> np.ndarray:
-    """The k-hash bit test of one bucket's bitmap ``bm``: True where all
-    k double-hashed bits of the key (hash pair h1, h2) are set."""
-    h1, h2 = h1.astype(np.uint64), h2.astype(np.uint64)
-    acc = np.ones(len(h1), dtype=bool)
-    for i in range(k):
-        idx = (h1 + np.uint64(i) * h2) % np.uint64(m)
-        acc &= (bm[(idx >> np.uint64(3)).astype(np.int64)]
-                >> (idx & np.uint64(7)).astype(np.uint8)) & 1 == 1
-    return acc
 
 
 def merge_blooms(a: BloomFilter | None, b: BloomFilter) -> BloomFilter:
@@ -132,33 +160,18 @@ def build_bloom_partials(
     (the 10^10 path — the driver never holds a bitmap).
     """
     hashed = _hash_cols(df.select(col), col).select("__h1", "__h2")
-    m = bits_per_bucket
-    k = num_hashes
-    B = buckets
-    tasks = min(B, df.sparkSession.sparkContext.defaultParallelism)
-    hashed = hashed.repartition(tasks, F.pmod(F.col("__h1"), F.lit(B)))
+    tasks = min(buckets, df.sparkSession.sparkContext.defaultParallelism)
+    hashed = hashed.repartition(tasks, _bucket_col(F.col("__h1"), buckets))
 
     def build(batches):
-        local: dict[int, np.ndarray] = {}
+        bf = BloomFilter(bits_per_bucket, num_hashes, buckets, {})
         for batch in batches:
-            h1 = batch.column("__h1").to_numpy(zero_copy_only=False).astype(np.uint64)
-            h2 = batch.column("__h2").to_numpy(zero_copy_only=False).astype(np.uint64)
-            bucket_ids = (h1 % np.uint64(B)).astype(np.int64)
-            for b in np.unique(bucket_ids):
-                bm = local.setdefault(int(b), np.zeros(m // 8, dtype=np.uint8))
-                sel = bucket_ids == b
-                hh1, hh2 = h1[sel], h2[sel]
-                for i in range(k):
-                    idx = (hh1 + np.uint64(i) * hh2) % np.uint64(m)
-                    np.bitwise_or.at(
-                        bm,
-                        (idx >> np.uint64(3)).astype(np.int64),
-                        (np.uint8(1) << (idx & np.uint64(7)).astype(np.uint8)),
-                    )
-        if local:
+            bf.add_np(batch.column("__h1").to_numpy(zero_copy_only=False),
+                      batch.column("__h2").to_numpy(zero_copy_only=False))
+        if bf.bitmaps:
             yield pa.RecordBatch.from_pydict({
-                "bucket": pa.array(list(local.keys()), pa.int32()),
-                "bitmap": pa.array([bm.tobytes() for bm in local.values()],
+                "bucket": pa.array(list(bf.bitmaps), pa.int32()),
+                "bitmap": pa.array([bm.tobytes() for bm in bf.bitmaps.values()],
                                    pa.binary()),
             })
 
@@ -203,9 +216,8 @@ def probe_bloom_bucketed(
     """
     from pyspark.sql.types import BooleanType, StructField, StructType
 
-    m, k, B = bits_per_bucket, num_hashes, buckets
     dfh = _hash_cols(df, key).withColumn(
-        "__bucket", F.pmod(F.col("__h1"), F.lit(B)).cast("int"))
+        "__bucket", _bucket_col(F.col("__h1"), buckets).cast("int"))
     out_schema = StructType(
         dfh.schema.fields + [StructField(out_col, BooleanType())])
     in_cols = [f.name for f in dfh.schema.fields]
@@ -217,13 +229,12 @@ def probe_bloom_bucketed(
         # (or_reduce_bitmaps emits one row per bucket) — this assert IS
         # the per-task-bytes-=-one-bucket claim, enforced at runtime
         assert len(right) <= 1, f"got {len(right)} bitmaps for one bucket"
-        if len(right) == 0:
-            left[out_col] = False
-            return left
-        left[out_col] = _bits_set(
-            np.frombuffer(right["bitmap"].iloc[0], dtype=np.uint8),
+        bf = BloomFilter(bits_per_bucket, num_hashes, buckets, {
+            int(b): np.frombuffer(bm, dtype=np.uint8)
+            for b, bm in zip(right["bucket"], right["bitmap"])})
+        left[out_col] = bf.might_contain_np(
             left["__h1"].to_numpy(dtype=np.int64),
-            left["__h2"].to_numpy(dtype=np.int64), m, k)
+            left["__h2"].to_numpy(dtype=np.int64))
         return left
 
     probed = (dfh.groupBy("__bucket")

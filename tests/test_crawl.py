@@ -254,12 +254,18 @@ def test_bloom_broadcasts_released_every_round(spark, site, tmp_path,
     assert all(any(r is b for r in released) for b in bloom_bcs)
 
 
-def test_crawl_config_rejects_unknown_fetch_join():
-    """A misspelt fetch_join must fail at construction, not silently
-    run another join; 'broadcast' is no longer a strategy."""
-    for bad in ("bucket", "broadcast", ""):
-        with pytest.raises(ValueError, match="fetch_join"):
-            CrawlConfig(fetch_join=bad)
+@pytest.mark.parametrize("field, value", [
+    ("fetch_join", "bucket"), ("fetch_join", "broadcast"),
+    ("fetch_join", ""), ("budget_per_host", 0), ("salt_buckets", 0),
+    ("bloom_buckets", 0), ("bloom_bits", 0), ("bloom_bits", 1001),
+])
+def test_crawl_config_rejects_out_of_range(field, value):
+    """A misspelt fetch_join ('broadcast' is no longer a strategy) or a
+    crawl shape no round can run must fail at construction, naming the
+    field, before any session work: a zero budget or bucket count, or
+    a bitmap size that is not a whole number of bytes."""
+    with pytest.raises(ValueError, match=field):
+        CrawlConfig(**{field: value})
     for ok in ("auto", "bucketed"):
         assert CrawlConfig(fetch_join=ok).fetch_join == ok
 
@@ -271,24 +277,38 @@ def test_bucketed_bloom_equals_broadcast(spark, site, tmp_path, engine,
     from siren_spark.operators import seen
     from siren_spark.operators.checkpoint import CheckpointStore
     monkeypatch.setattr(seen, "BLOOM_BROADCAST_MAX_BYTES", 0)
-    cfg = CrawlConfig(
-        budget_per_host=BUDGET, window_start=WINDOW_START,
-        window_end=WINDOW_END, keywords=SPEC.keywords,
-        use_bloom=True, bloom_bits=1 << 16, bloom_buckets=4, salt_buckets=4,
-    )
-    ckpt = str(tmp_path / "ckb")
-    res = run_crawl(spark, pages_df(spark, site.pages),
-                    seeds_df(spark, site.seeds), cfg, ckpt)
-    a = sorted(_result_key(r.asDict()) for r in res.results.collect())
-    b = sorted(_result_key(r.asDict()) for r in engine.results.collect())
-    assert a == b
-    store = CheckpointStore(ckpt)
-    last = store.latest_gen()
-    m = store.manifest(last)
-    assert "bloom_table" in m["stats"]
-    bm = spark.read.parquet(m["stats"]["bloom_table"])
-    assert bm.count() <= 4                     # one row per bucket
-    assert set(bm.columns) == {"bucket", "bitmap"}
+
+    def crawl(buckets, seeds):
+        cfg = CrawlConfig(
+            budget_per_host=BUDGET, window_start=WINDOW_START,
+            window_end=WINDOW_END, keywords=SPEC.keywords, use_bloom=True,
+            bloom_bits=1 << 16, bloom_buckets=buckets, salt_buckets=4,
+        )
+        ckpt = str(tmp_path / f"ckb{buckets}")
+        res = run_crawl(spark, pages_df(spark, site.pages),
+                        seeds_df(spark, seeds), cfg, ckpt)
+        store = CheckpointStore(ckpt)
+        m = store.manifest(store.latest_gen())
+        bm = spark.read.parquet(m["stats"]["bloom_table"])
+        assert bm.count() <= buckets           # one row per bucket
+        assert set(bm.columns) == {"bucket", "bitmap"}
+        return sorted(_result_key(r.asDict()) for r in res.results.collect())
+
+    assert crawl(4, site.seeds) == sorted(
+        _result_key(r.asDict()) for r in engine.results.collect())
+    # 3 buckets, with five indiatoday articles also seeded: round 1
+    # rediscovers them, so the probe must read each as maybe-seen. A
+    # build and a probe that bucket a key differently read seen URLs as
+    # definitely new, and the crawl fetches them twice.
+    revisits = sorted(p["url"] for p in site.pages if p["url"].startswith(
+        "https://indiatoday.example/story/"))
+    seeds = site.seeds + [
+        {"url": u, "keyword": None, "source": "indiatoday", "meta": {}}
+        for u in revisits[:5]]
+    sim = simulate_crawl(site.pages, seeds, budget_per_host=BUDGET,
+                         window_start=WINDOW_START, window_end=WINDOW_END,
+                         keywords=SPEC.keywords)
+    assert crawl(3, seeds) == sorted(_result_key(r) for r in sim.results)
 
 
 def test_ht_headline_dedup(engine, site):
@@ -541,14 +561,19 @@ def test_resume_refuses_checkpoint_without_source_lists(spark, tmp_path,
 
 def test_robots_auto_switches_to_cogroup(spark, site, tmp_path, monkeypatch):
     """The robots gate must not collect a rules table above the
-    broadcast threshold: RobotsMatcher (the broadcast path) is never
-    constructed; the cogroup gate produces the same blocked set."""
+    broadcast threshold: no RobotsMatcher is broadcast (the cogroup
+    builds one per domain group inside its tasks instead); the cogroup
+    gate produces the same blocked set."""
     from siren_spark.operators import robots as robots_mod
 
-    def boom(*a, **k):
-        raise AssertionError("broadcast matcher built for a large table")
+    real_broadcast = spark.sparkContext.broadcast
 
-    monkeypatch.setattr(robots_mod, "RobotsMatcher", boom)
+    def broadcast(value):
+        if isinstance(value, robots_mod.RobotsMatcher):
+            raise AssertionError("broadcast matcher built for a large table")
+        return real_broadcast(value)
+
+    monkeypatch.setattr(spark.sparkContext, "broadcast", broadcast)
     monkeypatch.setattr(robots_mod, "ROBOTS_BROADCAST_MAX", 2)
     robots = spark.createDataFrame(
         [("mirror-city.example", "User-agent: *\nDisallow: /\n"),

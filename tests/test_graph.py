@@ -8,8 +8,7 @@ the spec — not the implementation against itself.
 import pytest
 from pyspark.sql import Row, functions as F
 
-from siren_spark.functions.graph import (
-    frontier_priority, pagerank, synthetic_link_graph)
+from siren_spark.functions.graph import pagerank, synthetic_link_graph
 
 S = 10**12
 TELEPORT = (15 * S) // 100  # 150_000_000_000
@@ -98,16 +97,6 @@ def test_synthetic_link_graph_shape(spark):
     for r in e:
         indeg[r["dst"]] = indeg.get(r["dst"], 0) + 1
     assert len(set(indeg.values())) > 1
-
-
-def test_frontier_priority_left_join_defaults_zero(spark, ring_edges):
-    ranks = pagerank(ring_edges, iterations=1)
-    frontier = spark.createDataFrame(
-        [Row(node_id=0, url="a"), Row(node_id=99, url="never-seen")])
-    got = {r["node_id"]: r["priority"]
-           for r in frontier_priority(ranks, frontier).collect()}
-    assert got[0] == 1_850_000_000_000
-    assert got[99] == 0
 
 
 def test_anchor_text_rollup_hand_values(spark):

@@ -1,5 +1,6 @@
 """Unit tests for the standalone public operators (SURVEY §2/§4 customs)."""
 
+import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
@@ -123,7 +124,36 @@ def test_bloom_no_false_negatives_and_merge(spark):
                                    np.array([h.h2], dtype=np.int64))[0]
 
 
+def test_bloom_layout_matches_integer_reference():
+    """The numpy layout equals the rule in plain Python integers: bucket
+    = h1 floor-mod B (Spark's pmod), bit i = (h1 + i*h2) mod 2^64 mod m
+    over the unsigned hash pair."""
+    import numpy as np
+
+    from siren_spark.operators.seen import BloomFilter, _bloom_layout
+
+    rng = np.random.default_rng(7)
+    h1 = rng.integers(-2**63, 2**63 - 1, 500, dtype=np.int64)
+    h2 = rng.integers(-2**63, 2**63 - 1, 500, dtype=np.int64)
+    m, k = 1 << 12, 5
+    for buckets in (3, 4, 10):
+        bucket_ids, pos = _bloom_layout(h1, h2, m, k, buckets)
+        for a, b, got_b, got_pos in zip(h1.tolist(), h2.tolist(),
+                                        bucket_ids.tolist(), pos.tolist()):
+            assert got_b == a % buckets
+            assert got_pos == [((a % 2**64) + i * (b % 2**64)) % 2**64 % m
+                               for i in range(k)]
+        bf = BloomFilter(m, k, buckets, {})
+        bf.add_np(h1, h2)
+        assert set(bf.bitmaps) <= set(range(buckets))
+        assert bf.might_contain_np(h1, h2).all()
+
+
 def test_filter_unseen_bloom_equals_exact(spark):
+    """The Bloom path drops exactly the seen keys at any bucket count:
+    the build and the cogroup probe bucket a key alike, also where B is
+    not a power of two (a signed/unsigned split there reads seen keys
+    as definitely new)."""
     frontier = spark.createDataFrame(
         [(f"https://x.example/{i}",) for i in range(300)], "url_canon string")
     seen = spark.createDataFrame(
@@ -131,11 +161,13 @@ def test_filter_unseen_bloom_equals_exact(spark):
         "url_canon string")
     exact = sorted(r.url_canon for r in
                    filter_unseen(frontier, seen, bloom=False).collect())
-    bloom = sorted(r.url_canon for r in
-                   filter_unseen(frontier, seen, bloom=True,
-                                 bits_per_bucket=1 << 12, buckets=2).collect())
-    assert exact == bloom
     assert len(exact) == 200
+    for buckets in (2, 3, 10):
+        bloom = sorted(r.url_canon for r in
+                       filter_unseen(frontier, seen, bloom=True,
+                                     bits_per_bucket=1 << 12,
+                                     buckets=buckets).collect())
+        assert bloom == exact, buckets
 
 
 def test_filter_unseen_holds_no_filter_broadcast(spark, monkeypatch):
@@ -225,13 +257,21 @@ def test_or_reduce_matches_driver_merge(spark):
     df = spark.createDataFrame(
         [(f"u{i}",) for i in range(1000)], "url_canon string") \
         .repartition(7)  # many input partitions -> many partials pre-shuffle
-    kw = dict(bits_per_bucket=1 << 13, buckets=4)
-    bf = build_bloom(df, "url_canon", **kw)
-    reduced = {r.bucket: r.bitmap for r in or_reduce_bitmaps(
-        build_bloom_partials(df, "url_canon", **kw)).collect()}
-    assert set(reduced) == set(bf.bitmaps)
-    for b, bm in bf.bitmaps.items():
-        assert np.array_equal(np.frombuffer(reduced[b], dtype=np.uint8), bm)
+    for buckets in (4, 3):
+        kw = dict(bits_per_bucket=1 << 13, buckets=buckets)
+        partials = build_bloom_partials(df, "url_canon", **kw)
+        # the build shuffles rows by the bucket it sets bits in, so each
+        # bucket's partial comes from exactly one task
+        per_bucket = [r["count"] for r in
+                      partials.groupBy("bucket").count().collect()]
+        assert per_bucket and set(per_bucket) == {1}, (buckets, per_bucket)
+        bf = build_bloom(df, "url_canon", **kw)
+        reduced = {r.bucket: r.bitmap
+                   for r in or_reduce_bitmaps(partials).collect()}
+        assert set(reduced) == set(bf.bitmaps) <= set(range(buckets))
+        for b, bm in bf.bitmaps.items():
+            assert np.array_equal(np.frombuffer(reduced[b], dtype=np.uint8),
+                                  bm)
 
 
 def test_robots_cogroup_matches_broadcast(spark):
@@ -265,6 +305,16 @@ def test_robots_cogroup_matches_broadcast(spark):
     assert got["https://a.example/private/x"] is False
     assert got["https://a.example/private/ok/y"] is True
     assert got["https://norules.example/z"] is True
+
+    # two rules rows for one domain: both deliveries refuse the table
+    # instead of keeping whichever row came last
+    twice = spark.createDataFrame(
+        rules + [("b.example", "User-agent: *\nAllow: /\n")],
+        "domain string, rules string")
+    with pytest.raises(ValueError, match="b.example"):
+        RobotsGate(twice)
+    with pytest.raises(Exception, match="ValueError.*b.example"):
+        robots_annotate_cogroup(frontier, twice).collect()
 
 
 # ------------------------------------------------------------ sessionize

@@ -327,35 +327,6 @@ def test_dedup_components_vs_union_find(spark):
     assert got2 == set(ids) - {7, 30, 31}
 
 
-def test_bpe_merge_loop_counts(spark):
-    """Real BPE apply over the pre-tokens: greedy lowest-rank merges,
-    all occurrences per pass. Exact counts on a hand-computed fixture
-    plus the structural bounds n_pre <= n_merged <= n_chars."""
-    from siren_spark.functions.text import (
-        with_bpe_token_count, with_bpe_token_count_merged,
-    )
-
-    # default merges: (t,h)(th,e)(i,n)(a,n)(an,d)(e,r)... ->
-    # the->1  cat->[c,at]->2  and->1  in->1  !->1   => 6
-    df = spark.createDataFrame([(1, "the cat and in!"), (2, None), (3, "")],
-                               "doc_id long, text string")
-    got = {r.doc_id: r.n_bpe_tokens_merged
-           for r in with_bpe_token_count_merged(df).collect()}
-    assert got == {1: 6, 2: 0, 3: 0}
-    # custom merges override the embedded table
-    got2 = with_bpe_token_count_merged(
-        df, merges=[("c", "a"), ("ca", "t")]).collect()
-    n = {r.doc_id: r.n_bpe_tokens_merged for r in got2}
-    assert n[1] == 3 + 1 + 3 + 2 + 1          # the cat->1 and in !
-    # bounds on real data: pre-token count <= merged count <= chars
-    docs = spark.read.parquet(f"{SF}/documents.parquet").limit(200)
-    both = with_bpe_token_count_merged(with_bpe_token_count(docs))
-    rows = both.select("n_bpe_tokens", "n_bpe_tokens_merged",
-                       F.length("text").alias("n_chars")).collect()
-    assert rows and all(
-        r.n_bpe_tokens <= r.n_bpe_tokens_merged <= r.n_chars for r in rows)
-
-
 def test_repetition_stats(spark):
     from siren_spark.functions.text import with_repetition_stats
     df = spark.createDataFrame(
