@@ -16,16 +16,25 @@ structured so each round materializes exactly two heavy jobs:
    (co-partitioned on url_canon so only the small side shuffles) and run
    the single-pass Arrow extraction (links | records | errors).
 
-The Bloom seen-filter is maintained incrementally: each round builds a
-filter over its seen-delta only (mapInArrow) and OR-merges it into the
-running filter — driver-side for a broadcast filter, as a distributed
-(bucket, bitmap) checkpoint table above BLOOM_BROADCAST_MAX_BYTES — so no
-round rescans the seen history. The filter only narrows the confirm: a
-run without one (``use_bloom=False``) runs the same plan with every key
-a maybe, and gets the same crawl.
+The Bloom seen-filter is maintained incrementally: once per round the
+filter update builds a filter over the round's seen-delta only
+(mapInArrow) and OR-merges it into the running filter — driver-side for
+a broadcast filter, as a distributed (bucket, bitmap) checkpoint table
+above BLOOM_BROADCAST_MAX_BYTES — so no round rescans the seen history;
+the last round, whose filter no round reads, skips it. The filter only
+narrows the confirm: a run without one (``use_bloom=False``) runs the
+same plan with every key a maybe, and gets the same crawl.
+
+Each round step has one path. Every annotate is a future on the run's
+thread pool: round 0's (or the resumed round's) is submitted before the
+loop, round N+1's during round N's derived writes, so it overlaps them.
+The crawl stops where no annotate is submitted: at max_rounds, or at an
+empty next frontier, whose size (links + deferred, observed on the
+writes) is exact.
 
 Every round commits atomically (manifest rename); a killed run resumes
-from the last committed round with byte-identical final state.
+from the last committed round with byte-identical final state. A failed
+annotate raises from ``run_crawl``; resuming re-stages it.
 
 Determinism: every tie is broken on url_canon, so the scheduled set and
 crawl ordering are independent of parallelism — what makes the N-vs-4N
@@ -534,7 +543,6 @@ def run_crawl(
     # probe), the (bucket, bitmap) table of the bucketed mode, or None
     # (no filter: every frontier key is exact-confirmed)
     bloom: BloomFilter | DataFrame | None = None
-    seen_exact: DataFrame | None = None
     bucketed = cfg.use_bloom and bloom_bucketed(cfg.bloom_bits,
                                                 cfg.bloom_buckets)
     # the bucketed table is probed with the run's shape; a checkpoint
@@ -563,7 +571,8 @@ def run_crawl(
                                   store.read(spark, last, "frontier_ann"),
                                   last)
         seen_exact = _seen_df(spark, seen_sources)
-        if cfg.use_bloom and seen_exact is not None:
+        if (cfg.use_bloom and seen_exact is not None
+                and start_gen < cfg.max_rounds):
             if bucketed:
                 last_stats = store.manifest(last)["stats"]
                 bloom = (
@@ -577,15 +586,16 @@ def run_crawl(
         start_gen = 0
         frontier = _seeds_to_frontier(seeds)
 
-    # frontier size estimate for the seen-confirm strategy AND the
-    # politeness whole-frontier fast path: free from each round's
-    # observations (links + deferred); on resume or fresh start one
-    # cheap count (row-group stats / tiny seed table — round 0
-    # previously ran with no estimate, which forced the hot-domain
-    # count/join/window machinery even for a seed list far under the
-    # budget: pure fixed round-0 cost at every cluster size)
-    frontier_rows: int | None = (frontier.count() if resume
-                                 and start_gen > 0 else seeds.count())
+    # the exact frontier size: free from each round's observations
+    # (links + deferred); on a fresh start or resume one cheap count
+    # (tiny seed table / row-group stats). It picks the seen-confirm
+    # strategy and the politeness whole-frontier fast path, and it is
+    # the stop rule's input (round 0 used to run with no estimate, which
+    # forced the hot-domain count/join/window machinery even for a seed
+    # list far under the budget: pure fixed round-0 cost at every
+    # cluster size)
+    frontier_rows = (0 if start_gen >= cfg.max_rounds
+                     else frontier.count() if start_gen else seeds.count())
 
     def _log(msg: str) -> None:
         if cfg.verbose:
@@ -594,36 +604,23 @@ def run_crawl(
     round_secs: list[float] = []
     round_urls: list[int] = []
 
-    def _bloom_after(prev: BloomFilter | DataFrame | None,
-                     fut) -> BloomFilter | DataFrame | None:
-        """The filter once a round's update ``fut`` (None: no filter)
-        has landed: the round's staged bitmap table in bucketed mode,
-        else its delta filter OR-merged into ``prev`` (numpy,
-        driver-side, ~ms)."""
-        if fut is None:
-            return prev
-        if bucketed:
-            return spark.read.parquet(fut.result())
-        return merge_blooms(prev, fut.result())
-
-    def _stage_annotated(gen_: int, frontier_: DataFrame,
+    def _stage_annotated(gen_: int, frontier_: DataFrame, rows_: int,
+                         seen_sources_: list[dict],
                          bloom_: BloomFilter | DataFrame | None,
-                         seen_: DataFrame | None,
-                         frontier_rows_: int | None,
                          ) -> tuple[str, dict]:
-        """Annotate one round's frontier and stage it; returns
-        (path, by-status counts). Pure function of committed/staged
-        inputs, so it can run from a worker thread (round pipelining)
-        or inline — byte-identical either way."""
+        """Annotate round ``gen_``'s frontier (``rows_`` rows) against
+        the seen set of ``seen_sources_`` and the filter ``bloom_``, and
+        stage it; returns (path, by-status counts). A pure function of
+        committed/staged inputs, run from the pool."""
         caches: list = []
         bcasts: list = []
         try:
             ann = _annotate_round(frontier_, cfg=cfg, robots=gate,
                                   bloom=bloom_,
-                                  seen_exact=seen_,
+                                  seen_exact=_seen_df(spark, seen_sources_),
                                   cache_registry=caches,
                                   broadcasts=bcasts,
-                                  frontier_rows=frontier_rows_)
+                                  frontier_rows=rows_)
             # per-status counts ride the write as Observation metrics — no
             # second job over the staged parquet (part of the per-round
             # fixed cost the N->4N scaling comparison pays at every level)
@@ -639,72 +636,78 @@ def run_crawl(
                 c.unpersist()
         return path, {k: int(v) for k, v in ann_obs.get.items() if v}
 
-    # pre-staged next-round annotate: {"gen", "path", "counts"}
-    pending: dict | None = None
-    # one pool for the whole run: Bloom-delta builds / bucketed bitmap
-    # staging launch right after annotate (overlapping fetch+extract);
-    # the derived writes, seen/headline compactions and the pipelined
-    # next-round annotate overlap at round end; the commit overlaps the
-    # pipelined annotate's tail. Sized above the maximum concurrent task
-    # set (2 writes — results and counters — + bloom + 2 compactions +
-    # prestage = 6), so the hl-compaction task — which WAITS on the
-    # results-write future — can never be queued behind it (a same-pool
-    # wait on a queued task would deadlock).
+    def _annotate_future(gen_: int, frontier_: DataFrame, rows_: int,
+                         seen_sources_: list[dict],
+                         bloom_: BloomFilter | DataFrame | None):
+        """Round ``gen_``'s annotate as a pool future, or None where the
+        crawl stops: ``gen_`` reaches max_rounds or the frontier is
+        empty (``rows_`` is exact)."""
+        if gen_ >= cfg.max_rounds or rows_ == 0:
+            return None
+        return pool.submit(_stage_annotated, gen_, frontier_, rows_,
+                           seen_sources_, bloom_)
+
+    def _update_bloom(gen_: int, delta: DataFrame,
+                      prev: BloomFilter | DataFrame | None,
+                      ) -> tuple[BloomFilter | DataFrame, str | None]:
+        """Round ``gen_ + 1``'s filter: a filter over round ``gen_``'s
+        scheduled keys ``delta`` OR-merged into ``prev``, and the path
+        the commit references. In bucketed mode the merged (bucket,
+        bitmap) table is staged in round ``gen_``'s dir — fully
+        distributed, the driver never materializes a bitmap; else the
+        delta filter is OR-merged driver-side (numpy, ~ms) and there is
+        no path."""
+        if bucketed:
+            partials = _delta_partials(delta)
+            if prev is not None:
+                partials = prev.unionByName(partials)
+            path = store.stage_table(gen_, "bloom",
+                                     or_reduce_bitmaps(partials))
+            return spark.read.parquet(path), path
+        return merge_blooms(prev, _build_delta_bloom(delta)), None
+
+    # one pool for the whole run: every round's annotate runs on it
+    # (round N+1's overlaps round N's derived writes and commit); the
+    # filter update launches right after annotate (overlapping
+    # fetch+extract); the derived writes and the seen/headline
+    # compactions overlap at round end. Sized above the maximum
+    # concurrent task set (2 writes — results and counters — + filter
+    # update + 2 compactions + next annotate = 6), so the hl-compaction
+    # task — which WAITS on the results-write future — can never be
+    # queued behind it (a same-pool wait on a queued task would
+    # deadlock).
     pool = ThreadPoolExecutor(max_workers=8)
     # the robots gate (operators/robots.py) is built once per run: at
     # most one matcher broadcast, released in the finally below
     gate = RobotsGate(robots) if robots is not None else None
 
     try:
-        for gen in range(start_gen, cfg.max_rounds):
+        gen = start_gen
+        ann_fut = _annotate_future(gen, frontier, frontier_rows,
+                                   seen_sources, bloom)
+        while ann_fut is not None:
             t0 = time.time()
-            if frontier_rows == 0:
-                # the frontier size is exact (observed links + deferred,
-                # or a seed/resume count): an empty frontier needs no
-                # annotate job and must not stage a table no round will
-                # commit
-                break
 
             # ---- job 1: annotate + commit scheduling decisions -------------
-            if pending is not None and pending["gen"] == gen:
-                # staged concurrently with the previous round's derived
-                # writes (round pipelining) — already durable in the gen dir
-                ann_path, n_by_status = pending["path"], pending["counts"]
-                pending = None
-            else:
-                ann_path, n_by_status = _stage_annotated(
-                    gen, frontier, bloom, seen_exact, frontier_rows)
+            # a failed annotate raises here (or at the previous round's
+            # end): resume from the last committed round
+            ann_path, n_by_status = ann_fut.result()
             ann_r = spark.read.parquet(ann_path)
             _log(f"gen {gen} annotate {time.time()-t0:.1f}s {n_by_status}")
-            if not n_by_status:   # empty frontier -> done (no round committed)
-                break
 
-            # the Bloom state update depends only on the (already staged)
+            # the filter update depends only on the (already staged)
             # annotated frontier — kick it off NOW so it overlaps the long
-            # fetch+extract stage instead of serializing ahead of the
-            # pipelined next-round annotate in the writes window. In
-            # bucketed mode the update is itself a staged table (delta
-            # partials OR-merged into last round's committed bitmaps): it
-            # lands in this round's uncommitted gen dir, the commit below
-            # references it, and the prestaged next-round annotate reads it
-            # pre-commit — which is what keeps round pipelining effective
-            # in the 10^10-scale configuration.
+            # fetch+extract stage. In bucketed mode it lands in this
+            # round's uncommitted gen dir, the commit below references it,
+            # and next round's annotate reads it pre-commit — which is
+            # what keeps round pipelining effective in the 10^10-scale
+            # configuration. The last round's filter has no reader
             bloom_fut = None
-            prev_bloom = bloom
-            delta_r = (ann_r.filter(F.col("status") == "scheduled")
-                       .select("url_canon"))
-            if bucketed:
-
-                def _stage_bloom_table() -> str:
-                    partials = _delta_partials(delta_r)
-                    if prev_bloom is not None:
-                        partials = prev_bloom.unionByName(partials)
-                    return store.stage_table(gen, "bloom",
-                                             or_reduce_bitmaps(partials))
-
-                bloom_fut = pool.submit(_stage_bloom_table)
-            elif cfg.use_bloom:
-                bloom_fut = pool.submit(_build_delta_bloom, delta_r)
+            if cfg.use_bloom and gen + 1 < cfg.max_rounds:
+                bloom_fut = pool.submit(
+                    _update_bloom, gen,
+                    ann_r.filter(F.col("status") == "scheduled")
+                    .select("url_canon"), bloom)
 
             sched = ann_r.filter(F.col("status") == "scheduled")
 
@@ -732,8 +735,8 @@ def run_crawl(
                 fetched = fetch_side.join(pages_p, "url_canon", "inner")
             fetch_in = fetched.select("url", "html", "meta")
             # the discovered-link count rides the write as an Observation:
-            # links + this round's deferred = next round's frontier size,
-            # the (free) estimate the seen-confirm strategy keys on
+            # links + this round's deferred = next round's exact frontier
+            # size, the stop rule's input
             ex_obs = Observation(f"ex_{gen}")
             extracted_path = store.stage_table(
                 gen, "extracted",
@@ -758,9 +761,7 @@ def run_crawl(
             # url_canon/domain of the link rows were computed inside the
             # extraction kernel (the link strings were already in Python
             # there) — a pure column-pruned select, no UDF job over the
-            # staged output. The prestaged next-round annotate consumes
-            # this frame, and so does next round's inline annotate if the
-            # prestage fails
+            # staged output; next round's annotate consumes this frame
             next_frontier = _next_frontier(ex, ann_r, gen)
 
             # the round's record count rides the counters write as an
@@ -775,35 +776,12 @@ def run_crawl(
             # stage them from concurrent driver threads so the cluster runs
             # them as overlapping jobs (tail tasks of one fill the slots of
             # another) instead of paying scheduling latency + straggler tail
-            # three times in sequence. The round's Bloom-delta build (also
-            # only a function of ann_path) overlaps in the same window.
+            # three times in sequence.
             # Per-round serial cost is exactly what the N->4N scaling
             # comparison pays at every cluster size.
             tw = time.time()
-            next_fut = None
             seen_sources_next = seen_sources + [{"path": ann_path,
                                                  "kind": "ann"}]
-
-            def _prestage_next() -> dict | None:
-                """Round gen+1's annotate, overlapped with this round's
-                derived writes (they are independent: it reads only the two
-                staged tables + the Bloom state). Any failure falls back to
-                inline annotation next round — pipelining is an overlap,
-                never a correctness dependency."""
-                try:
-                    # in bucketed mode: this round's staged (pre-commit)
-                    # bitmap table; the commit below references exactly
-                    # this path before the prestaged annotate is consumed
-                    bloom_next = _bloom_after(prev_bloom, bloom_fut)
-                    seen_next = _seen_df(spark, seen_sources_next)
-                    path, counts = _stage_annotated(
-                        gen + 1, next_frontier, bloom_next, seen_next,
-                        frontier_rows)
-                    return {"gen": gen + 1, "path": path, "counts": counts}
-                except Exception as e:       # noqa: BLE001
-                    _log(f"gen {gen}   prestage next-round annotate "
-                         f"failed ({e!r}); will annotate inline")
-                    return None
 
             # NO dedicated "frontier" table: _next_frontier rebuilds it
             # from links(extracted) + deferred(frontier_ann), both staged
@@ -841,17 +819,16 @@ def run_crawl(
 
                 hl_fut = pool.submit(_stage_hl_compact)
             # round pipelining: round N+1's annotate depends only on round
-            # N's STAGED tables and the Bloom state, not on the derived
+            # N's STAGED tables and the updated filter, not on the derived
             # writes, so it runs concurrently with them — taking the ~flat
             # annotate latency off the round critical path. Safe under
-            # kills: the prestaged tables are uncommitted, and resume
-            # rebuilds them from the same deterministic committed inputs.
-            # Skipped when this round's observations already prove the
-            # next frontier empty (links + deferred == 0): the annotate
-            # would only stage a table no round consumes, plus an
-            # uncommitted gen dir the run would leave behind
-            if gen + 1 < cfg.max_rounds and (frontier_rows or 0) > 0:
-                next_fut = pool.submit(_prestage_next)
+            # kills: the staged tables are uncommitted, and resume
+            # rebuilds them from the same deterministic committed inputs
+            bloom_path = None
+            if bloom_fut is not None:
+                bloom, bloom_path = bloom_fut.result()
+            ann_fut = _annotate_future(gen + 1, next_frontier, frontier_rows,
+                                       seen_sources_next, bloom)
             # the manifest commits exactly the paths stage_table returned
             staged = {"frontier_ann": ann_path, "extracted": extracted_path}
             staged.update((name, f.result()) for name, f in futs.items())
@@ -877,34 +854,19 @@ def run_crawl(
                 "seen_sources": seen_sources,
                 "hl_seen_sources": hl_sources,
             }
+            if bloom_path is not None:
+                # the checkpoint carries the bucketed filter state
+                staged["bloom"] = stats["bloom_table"] = bloom_path
             if bucketed:
-                # bucketed filter state: the round's delta partials were
-                # OR-merged into the running bitmap table and staged from
-                # the pool right after annotate (overlapping fetch+extract)
-                # — fully distributed, the driver never materializes a
-                # bitmap; the commit references the staged path and the
-                # checkpoint carries it
-                staged["bloom"] = stats["bloom_table"] = bloom_fut.result()
                 stats["bloom_shape"] = bloom_shape
 
             store.write_round(gen, staged, stats=stats)
-            # roll forward from committed state: next_frontier reads
-            # only this round's committed staged parquet (extracted +
-            # frontier_ann), so it IS durable state — the same
-            # _next_frontier call rebuilds it on resume
-            frontier = next_frontier
-            seen_exact = _seen_df(spark, seen_sources)
-            # the filter update ran concurrently with fetch+extract
-            bloom = _bloom_after(bloom, bloom_fut)
-            if next_fut is not None:
-                # next round's annotate was staged concurrently with this
-                # round's writes + commit (None if it failed -> annotate
-                # inline)
-                pending = next_fut.result()
-
             # the round timer closes only after every overlapped task the
-            # round started has landed — steady-state throughput must not
-            # hide pipelined work in the gap between timers
+            # round started has landed — next round's annotate included —
+            # so steady-state throughput does not hide pipelined work in
+            # the gap between timers
+            if ann_fut is not None:
+                ann_fut.result()
             _log(f"gen {gen} commit {time.time()-t2:.1f}s "
                  f"total {time.time()-t0:.1f}s")
             round_secs.append(time.time() - t0)
@@ -913,34 +875,25 @@ def run_crawl(
 
             if fail_after_round is not None and gen >= fail_after_round:
                 raise RuntimeError(f"simulated kill after round {gen}")
-
-            if n_by_status.get("scheduled", 0) == 0 and \
-                    n_by_status.get("deferred", 0) == 0:
-                break
+            gen += 1
 
     except BaseException:
         # a failing Spark action must not leave non-daemon pool
         # workers driving queued jobs (concurrent.futures' atexit
         # join would otherwise block interpreter shutdown until an
-        # in-flight pre-staged annotate finishes): cancel queued
-        # work and surface the error. Any in-flight pre-stage
-        # write lands in an uncommitted gen dir that resume
-        # ignores and cleans.
+        # in-flight next-round annotate finishes): cancel queued
+        # work and surface the error. An in-flight staged write lands
+        # in an uncommitted gen dir that resume ignores and cleans.
         pool.shutdown(wait=False, cancel_futures=True)
         raise
     finally:
         # on every exit path: returned frames are all parquet-backed (no
-        # live plan holds the gate UDF), and an in-flight pre-stage of a
+        # live plan holds the gate UDF), and an in-flight annotate of a
         # failed run re-reads the matcher from the driver
         if gate is not None:
             gate.release()
     pool.shutdown(wait=True)
     last = store.latest_gen()
-    # reclaim any staged-but-never-committed gen dir (an inline annotate
-    # of a frontier that turned out empty, or a prestage raced by an
-    # unusual termination): harmless for resume — manifests gate every
-    # read — but a completed crawl should leave a clean checkpoint
-    store.drop_uncommitted((last + 1) if last is not None else 0)
     return CrawlResult(
         rounds=(last + 1 if last is not None else 0),
         results=store.read_all(spark, "results"),

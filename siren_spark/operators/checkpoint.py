@@ -3,11 +3,14 @@
 Iceberg snapshot semantics without the Iceberg runtime jar (absent in
 this sandbox — SURVEY.md §7.6): each round's tables are written under
 ``root/gen=N/<table>/`` as Parquet, then a manifest JSON is committed by
-atomic rename into ``root/_manifests/N.json``. A killed run leaves at
-most an uncommitted gen directory, which resume ignores; restart reads
-the highest committed manifest and continues from its frontier/seen —
-the lineage/counter analog of siren's logged mismatch counts
-(toi.py:198-202) made queryable state.
+atomic rename into ``root/_manifests/N.json``. A killed or failed run
+leaves uncommitted gen directories behind (the round it was in, and the
+next round's annotate the crawl stages ahead of the commit), which
+resume ignores and the first re-stage into such a gen removes; restart
+reads the highest committed manifest and continues from its
+frontier/seen — the lineage/counter analog of siren's logged mismatch
+counts (toi.py:198-202) made queryable state. A completed crawl
+commits every table it stages, so it leaves no uncommitted directory.
 
 On a real cluster, swap ``CheckpointStore`` for the Iceberg catalog
 (``df.writeTo(...).createOrReplace()`` per snapshot); the crawl loop only
@@ -46,17 +49,6 @@ class CheckpointStore:
         if os.path.exists(gd) and not os.path.exists(self._manifest_path(gen)):
             shutil.rmtree(gd)
         self._staged_gens.add(gen)
-
-    def drop_uncommitted(self, gen: int) -> None:
-        """Remove gen ``gen``'s directory iff it was never committed —
-        used by the crawl loop at normal exit to reclaim a prestaged
-        next-round table that no round ended up consuming (pipelining
-        garbage; resume would also ignore it, this just keeps the
-        checkpoint clean). A committed gen is never touched."""
-        gd = self._gen_dir(gen)
-        if os.path.exists(gd) and not os.path.exists(self._manifest_path(gen)):
-            shutil.rmtree(gd)
-        self._staged_gens.discard(gen)
 
     def stage_table(self, gen: int, name: str, df: DataFrame) -> str:
         """Materialize an intermediate table under the (uncommitted) gen

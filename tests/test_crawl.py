@@ -48,8 +48,47 @@ def engine(spark, site, tmp_path_factory):
                      seeds_df(spark, site.seeds), cfg, ckpt)
 
 
+@pytest.fixture(scope="module")
+def revisit_seeds(site):
+    """The site's seeds plus five indiatoday articles that round 1
+    rediscovers: the seen probe must read each as maybe-seen. A probe
+    that reads seen keys as definitely new fetches them twice — on the
+    plain site no frontier holds a URL fetched in an earlier round, so
+    such a probe goes unnoticed there."""
+    revisits = sorted(p["url"] for p in site.pages if p["url"].startswith(
+        "https://indiatoday.example/story/"))
+    return site.seeds + [
+        {"url": u, "keyword": None, "source": "indiatoday", "meta": {}}
+        for u in revisits[:5]]
+
+
+@pytest.fixture(scope="module")
+def revisit_sim(site, revisit_seeds):
+    return simulate_crawl(
+        site.pages, revisit_seeds, budget_per_host=BUDGET,
+        window_start=WINDOW_START, window_end=WINDOW_END,
+        keywords=SPEC.keywords,
+    )
+
+
 def _result_key(r):
     return (r["source"], r["url"], r["title"] or "", r["text"], r["gen"])
+
+
+def _sim_results(sim):
+    return sorted(_result_key(r) for r in sim.results)
+
+
+def _crawl_results(res):
+    return sorted(_result_key(r.asDict()) for r in res.results.collect())
+
+
+def _bloom_cfg(**kw):
+    return CrawlConfig(
+        budget_per_host=BUDGET, window_start=WINDOW_START,
+        window_end=WINDOW_END, keywords=SPEC.keywords,
+        use_bloom=True, bloom_bits=1 << 16, bloom_buckets=4, salt_buckets=4,
+        **kw)
 
 
 def test_seen_set_identical(engine, sim):
@@ -106,37 +145,36 @@ def test_schedule_per_round_matches_oracle(spark, site, sim, tmp_path):
         assert sorted(r.url_canon for r in delta) == sorted(expected_round), gen
 
 
-def test_resume_equals_uninterrupted(spark, site, engine, tmp_path):
-    cfg = CrawlConfig(
-        budget_per_host=BUDGET, window_start=WINDOW_START,
-        window_end=WINDOW_END, keywords=SPEC.keywords,
-        use_bloom=True, bloom_bits=1 << 16, bloom_buckets=4, salt_buckets=4,
-    )
+def test_resume_equals_uninterrupted(spark, site, revisit_seeds,
+                                     revisit_sim, tmp_path):
+    """A run killed after round 1 resumes to the oracle's crawl of a
+    site whose frontiers hold seen URLs."""
+    cfg = _bloom_cfg()
     ckpt = str(tmp_path / "ck2")
     with pytest.raises(RuntimeError, match="simulated kill"):
         run_crawl(spark, pages_df(spark, site.pages),
-                  seeds_df(spark, site.seeds), cfg, ckpt, fail_after_round=1)
+                  seeds_df(spark, revisit_seeds), cfg, ckpt,
+                  fail_after_round=1)
     resumed = run_crawl(spark, pages_df(spark, site.pages),
-                        seeds_df(spark, site.seeds), cfg, ckpt, resume=True)
-    a = sorted(_result_key(r.asDict()) for r in resumed.results.collect())
-    b = sorted(_result_key(r.asDict()) for r in engine.results.collect())
-    assert a == b
-    sa = {r.url_canon for r in resumed.seen.collect()}
-    sb = {r.url_canon for r in engine.seen.collect()}
-    assert sa == sb
+                        seeds_df(spark, revisit_seeds), cfg, ckpt,
+                        resume=True)
+    assert _crawl_results(resumed) == _sim_results(revisit_sim)
+    assert {r.url_canon for r in resumed.seen.collect()} == revisit_sim.seen
 
 
-def test_bloom_equals_exact(spark, site, tmp_path, engine):
-    """Bloom + exact-confirm path produces the same crawl as plain anti-join."""
-    cfg = CrawlConfig(budget_per_host=BUDGET, window_start=WINDOW_START,
-                      window_end=WINDOW_END, keywords=SPEC.keywords,
-                      use_bloom=False)
-    ckpt = str(tmp_path / "ck3")
-    exact = run_crawl(spark, pages_df(spark, site.pages),
-                      seeds_df(spark, site.seeds), cfg, ckpt)
-    a = sorted(_result_key(r.asDict()) for r in exact.results.collect())
-    b = sorted(_result_key(r.asDict()) for r in engine.results.collect())
-    assert a == b
+def test_bloom_equals_exact(spark, site, revisit_seeds, revisit_sim,
+                            tmp_path):
+    """Bloom + exact-confirm path produces the same crawl as plain
+    anti-join — and both the oracle's — on a site whose frontiers hold
+    seen URLs."""
+    exact = CrawlConfig(budget_per_host=BUDGET, window_start=WINDOW_START,
+                        window_end=WINDOW_END, keywords=SPEC.keywords,
+                        use_bloom=False)
+    for name, cfg in (("bloom", _bloom_cfg()), ("exact", exact)):
+        res = run_crawl(spark, pages_df(spark, site.pages),
+                        seeds_df(spark, revisit_seeds), cfg,
+                        str(tmp_path / f"ck3_{name}"))
+        assert _crawl_results(res) == _sim_results(revisit_sim), name
 
 
 def test_robots_gating(spark, site, tmp_path, monkeypatch):
@@ -271,6 +309,7 @@ def test_crawl_config_rejects_out_of_range(field, value):
 
 
 def test_bucketed_bloom_equals_broadcast(spark, site, tmp_path, engine,
+                                         revisit_seeds, revisit_sim,
                                          monkeypatch):
     """The bucketed (cogroup) Bloom probe path crawls identically to the
     broadcast path — and its bitmap table is committed/resumable."""
@@ -296,19 +335,10 @@ def test_bucketed_bloom_equals_broadcast(spark, site, tmp_path, engine,
 
     assert crawl(4, site.seeds) == sorted(
         _result_key(r.asDict()) for r in engine.results.collect())
-    # 3 buckets, with five indiatoday articles also seeded: round 1
-    # rediscovers them, so the probe must read each as maybe-seen. A
-    # build and a probe that bucket a key differently read seen URLs as
+    # 3 buckets, on the site whose frontiers hold seen URLs: a build
+    # and a probe that bucket a key differently read seen URLs as
     # definitely new, and the crawl fetches them twice.
-    revisits = sorted(p["url"] for p in site.pages if p["url"].startswith(
-        "https://indiatoday.example/story/"))
-    seeds = site.seeds + [
-        {"url": u, "keyword": None, "source": "indiatoday", "meta": {}}
-        for u in revisits[:5]]
-    sim = simulate_crawl(site.pages, seeds, budget_per_host=BUDGET,
-                         window_start=WINDOW_START, window_end=WINDOW_END,
-                         keywords=SPEC.keywords)
-    assert crawl(3, seeds) == sorted(_result_key(r) for r in sim.results)
+    assert crawl(3, revisit_seeds) == _sim_results(revisit_sim)
 
 
 def test_ht_headline_dedup(engine, site):
@@ -591,31 +621,26 @@ def test_robots_auto_switches_to_cogroup(spark, site, tmp_path, monkeypatch):
 
 
 def test_bucketed_pipeline_resume_equals_uninterrupted(
-        spark, site, engine, tmp_path, monkeypatch):
-    """Round pipelining now stays effective in bucketed-bloom mode (the
+        spark, site, revisit_seeds, revisit_sim, tmp_path, monkeypatch):
+    """Round pipelining stays effective in bucketed-bloom mode (the
     10^10-scale configuration): the round's bitmap table is staged in
-    the overlap window and the prestaged next-round annotate reads it
-    pre-commit. A kill mid-run must still resume to the byte-identical
-    result set — the prestaged gen dir is uncommitted and rebuilt."""
+    the overlap window and next round's annotate reads it pre-commit. A
+    kill mid-run must still resume to the oracle's result set on a site
+    whose frontiers hold seen URLs — the next round's staged gen dir is
+    uncommitted and rebuilt."""
     from siren_spark.operators import seen
     monkeypatch.setattr(seen, "BLOOM_BROADCAST_MAX_BYTES", 0)
-    cfg = CrawlConfig(
-        budget_per_host=BUDGET, window_start=WINDOW_START,
-        window_end=WINDOW_END, keywords=SPEC.keywords,
-        use_bloom=True, bloom_bits=1 << 16, bloom_buckets=4, salt_buckets=4,
-    )
+    cfg = _bloom_cfg()
     ckpt = str(tmp_path / "ckbp")
     with pytest.raises(RuntimeError, match="simulated kill"):
         run_crawl(spark, pages_df(spark, site.pages),
-                  seeds_df(spark, site.seeds), cfg, ckpt, fail_after_round=1)
+                  seeds_df(spark, revisit_seeds), cfg, ckpt,
+                  fail_after_round=1)
     resumed = run_crawl(spark, pages_df(spark, site.pages),
-                        seeds_df(spark, site.seeds), cfg, ckpt, resume=True)
-    a = sorted(_result_key(r.asDict()) for r in resumed.results.collect())
-    b = sorted(_result_key(r.asDict()) for r in engine.results.collect())
-    assert a == b
-    sa = {r.url_canon for r in resumed.seen.collect()}
-    sb = {r.url_canon for r in engine.seen.collect()}
-    assert sa == sb
+                        seeds_df(spark, revisit_seeds), cfg, ckpt,
+                        resume=True)
+    assert _crawl_results(resumed) == _sim_results(revisit_sim)
+    assert {r.url_canon for r in resumed.seen.collect()} == revisit_sim.seen
 
 
 def test_bucketed_resume_with_another_bloom_shape(spark, site, engine,
@@ -656,9 +681,9 @@ def test_bucketed_resume_with_another_bloom_shape(spark, site, engine,
 
 
 def test_completed_crawl_leaves_clean_checkpoint(spark, site, tmp_path):
-    """A completed run must leave no uncommitted gen dir behind — the
-    prestage is skipped once the observations prove the next frontier
-    empty, and any staged-but-unconsumed dir is reclaimed at exit."""
+    """A completed run must leave no uncommitted gen dir behind: no
+    annotate is submitted once the observations prove the next frontier
+    empty, and every one that is submitted is consumed and committed."""
     import os
 
     cfg = CrawlConfig(
@@ -672,6 +697,77 @@ def test_completed_crawl_leaves_clean_checkpoint(spark, site, tmp_path):
     committed = {f"gen={g}" for g in range(res.rounds)}
     on_disk = {d for d in os.listdir(ckpt) if d.startswith("gen=")}
     assert on_disk == committed
+
+
+def test_annotate_failure_surfaces(spark, site, sim, tmp_path, monkeypatch):
+    """A failing annotate raises from run_crawl — it is not swallowed and
+    re-run — and a resume after the failure crawls like an
+    uninterrupted run."""
+    from siren_spark import crawl
+
+    calls = []
+    real = crawl._annotate_round
+
+    def flaky(*a, **k):
+        calls.append(1)
+        if len(calls) == 2:                     # round 1's annotate
+            raise RuntimeError("injected annotate failure")
+        return real(*a, **k)
+
+    monkeypatch.setattr(crawl, "_annotate_round", flaky)
+    cfg = _bloom_cfg()
+    ckpt = str(tmp_path / "ck_fail")
+    with pytest.raises(RuntimeError, match="injected annotate failure"):
+        run_crawl(spark, pages_df(spark, site.pages),
+                  seeds_df(spark, site.seeds), cfg, ckpt)
+    assert len(calls) == 2
+    resumed = run_crawl(spark, pages_df(spark, site.pages),
+                        seeds_df(spark, site.seeds), cfg, ckpt, resume=True)
+    assert _crawl_results(resumed) == _sim_results(sim)
+    assert {r.url_canon for r in resumed.seen.collect()} == sim.seen
+
+
+def test_one_filter_update_per_round(spark, site, sim, tmp_path,
+                                     monkeypatch):
+    """Each round builds its Bloom delta and merges it once, and the last
+    round — whose filter no round reads — skips the update: in bucketed
+    mode its manifest carries no bitmap table, and a resume rebuilds
+    the filter from the seen set."""
+    from siren_spark import crawl
+    from siren_spark.operators import seen
+    from siren_spark.operators.checkpoint import CheckpointStore
+
+    calls = {"build_bloom": 0, "merge_blooms": 0}
+    for name in calls:
+        def spy(*a, _real=getattr(crawl, name), _name=name, **k):
+            calls[_name] += 1
+            return _real(*a, **k)
+        monkeypatch.setattr(crawl, name, spy)
+
+    def _run(cfg, ckpt, **kw):
+        for name in calls:
+            calls[name] = 0
+        return run_crawl(spark, pages_df(spark, site.pages),
+                         seeds_df(spark, site.seeds), cfg,
+                         str(tmp_path / ckpt), **kw)
+
+    _run(_bloom_cfg(max_rounds=2), "ck_two")
+    assert calls["build_bloom"] == 1 and calls["merge_blooms"] <= 1
+    # ends on an empty frontier
+    res = _run(_bloom_cfg(), "ck_all")
+    assert res.rounds < 30
+    assert calls["build_bloom"] <= res.rounds
+    assert calls["merge_blooms"] <= res.rounds
+
+    monkeypatch.setattr(seen, "BLOOM_BROADCAST_MAX_BYTES", 0)
+    _run(_bloom_cfg(max_rounds=2), "ck_bucketed")
+    store = CheckpointStore(str(tmp_path / "ck_bucketed"))
+    assert store.latest_gen() == 1
+    assert "bloom_table" in store.manifest(0)["stats"]
+    assert "bloom_table" not in store.manifest(1)["stats"]
+    resumed = _run(_bloom_cfg(), "ck_bucketed", resume=True)
+    assert _crawl_results(resumed) == _sim_results(sim)
+    assert {r.url_canon for r in resumed.seen.collect()} == sim.seen
 
 
 def test_debug_invariants_catch_domain_corruption(spark, site, engine,
